@@ -4426,11 +4426,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (_STRIP_HTML_SQL, _NORMALIZE_TEXT_SQL — likewise pre-validated);
     # (c) ~23 spare slots — fill with the OLDEST r12 rows to flatten
     # r15's otherwise-47-row bulge.
+    #
+    # Interval-join consolidation amendment (resample_eav/resample_interval
+    # now join irregular windows through merge_intervals, whose bucket
+    # join gained the non-finite split): the change reaches make_windows,
+    # merge_indexers and merge_keep_both, so they swap INTO the window for
+    # ngram_jaccard, sample_stratified and pack_sequences, whose exercised
+    # code is unchanged since their green rows (rotation_check-verified).
     return {
         "merge_overlap": q_merge_overlap,
         "merge_open_endpoints": q_merge_open_endpoints,
         "merge_left_keep_first": q_merge_left_keep_first,
-        "ngram_jaccard": q_ngram_jaccard,
+        "merge_keep_both": q_merge_keep_both,
         "minhash_lsh": q_minhash_lsh,
         "merge_cat_intervals": q_merge_cat_intervals,
         "merge_str_intervals": q_merge_str_intervals,
@@ -4470,10 +4477,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "substring_removal": q_substring_removal,
         "kmeans_ann": q_kmeans_ann,
         "q8_ann": q_q8_ann,
-        "sample_stratified": q_sample_stratified,
+        "merge_indexers": q_merge_indexers,
         "heavy_hitters": q_heavy_hitters,
         "mix_corpora": q_mix_corpora,
-        "pack_sequences": q_pack_sequences,
+        "make_windows": q_make_windows,
         "quantile_sketch": q_quantile_sketch,
         "dedup_clusters": q_dedup_clusters,
         "ccnet_buckets": q_ccnet_buckets,
@@ -4496,8 +4503,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_png": q_multimodal_png,
         "multimodal_resize": q_multimodal_resize,
         "multimodal_wav": q_multimodal_wav,
-        "make_windows": q_make_windows,
-        "merge_indexers": q_merge_indexers,
+        "pack_sequences": q_pack_sequences,
+        "sample_stratified": q_sample_stratified,
         "topk": q_topk,
         "retention": q_retention,
         "embedding_q8": q_embedding_q8,
@@ -4539,7 +4546,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_pii": q_scrub_pii,
         "repetition": q_repetition,
         "langid": q_langid,
-        "merge_keep_both": q_merge_keep_both,
+        "ngram_jaccard": q_ngram_jaccard,
         "sessionize": q_sessionize,
         "stream_resample": q_stream_resample,
         "stream_ffill": q_stream_ffill,

@@ -20,9 +20,10 @@ as join predicates, with two distributed physical strategies behind one API
   pairs.  Turns an O(n·m) broadcast-nested-loop into a shuffle join whose
   cost is O(matches + n·avg_span/W) — the strategy Databricks' range-join
   hint automates, expressed in the open DataFrame API.  This strategy
-  requires finite start/stop columns on both sides and raises otherwise
+  requires start/stop columns on both sides and raises otherwise
   (there is no automatic fallback; pick ``strategy="direct"`` for
-  half-infinite intervals).
+  half-infinite intervals); rows whose endpoint value is ±inf or NaN
+  pair through the plain keyed join instead of the buckets.
 
 Determinism: row ids, when the engine has to generate them (``keep``
 reduction, ``return_indexers``, bucket pair-dedup), are **content-derived**
@@ -82,8 +83,6 @@ _AUTO_RATIO = 1024.0
 # 16384 splits the 4.5k/45k anchors; below it a mispicked direct is
 # bounded small, above it the BNLJ grows without bound.
 _AUTO_RATIO_KEYLESS = 16384.0
-_AUTO_CACHE: dict = {}
-_AUTO_CACHE_MAX = 256
 
 
 def _auto_few_large_groups(left: DataFrame, right: DataFrame,
@@ -124,30 +123,11 @@ def _auto_few_large_groups(left: DataFrame, right: DataFrame,
     2. **Measured statistics, two one-row jobs submitted CONCURRENTLY**
        (count + approx_count_distinct(keys) per side, map-side partial
        agg): wall cost is the max of the two scans, not their sum.
-    3. The decision is memoized on the ``semanticHash`` of both inputs
-       (re-building the same query — bench warm runs, repeated notebook
-       cells — pays once per process), and ``spark.conf.set(
-       "spark.catabra.merge.costAuto", "false")`` disables the detector
-       (auto then always means direct, the pre-r11 behavior).
 
     Callers with expensive non-persisted upstream pipelines should either
     persist them or pin ``strategy=`` explicitly: the measured pass
     re-executes the input plan once.
     """
-    try:
-        spark = left.sparkSession
-        if str(spark.conf.get("spark.catabra.merge.costAuto", "true")
-               ).lower() != "true":
-            return False
-    except Exception:
-        return False
-    try:
-        ck = (left.semanticHash(), right.semanticHash(),
-              tuple(left_on), tuple(right_on))
-    except Exception:
-        ck = None
-    if ck is not None and ck in _AUTO_CACHE:
-        return _AUTO_CACHE[ck]
 
     def _opt_stats(df):
         try:
@@ -199,10 +179,6 @@ def _auto_few_large_groups(left: DataFrame, right: DataFrame,
         g = max(1, min(gl, gr))
         decision = (n > 0 and m > 0
                     and float(n) * float(m) / g > ratio * (n + m))
-    if ck is not None:
-        if len(_AUTO_CACHE) >= _AUTO_CACHE_MAX:
-            _AUTO_CACHE.clear()
-        _AUTO_CACHE[ck] = decision
     return decision
 
 
@@ -275,7 +251,7 @@ def merge_intervals(
       a cost-based few-large-groups detector (``_auto_few_large_groups``:
       optimizer plan statistics first — known row counts often decide
       with zero jobs — then one concurrent count+approx_count_distinct
-      pass per side, memoized, skipped for tiny inputs) and picks the
+      pass per side, skipped for tiny inputs) and picks the
       sweep when the direct join's
       estimated per-group residual ``n*m/G`` exceeds ``1024*(n+m)`` — the
       regime where direct is a measured 15x slower
@@ -286,9 +262,7 @@ def merge_intervals(
       nested-loop whose comparisons are ~3x cheaper than SMJ residuals
       but whose cost grows as n*m without a key to divide it; measured
       16x slower than the sweep at 1M x 100k, while small keyless inputs
-      where the BNLJ wins stay direct).  Disable the detector with
-      ``spark.conf.set("spark.catabra.merge.costAuto", "false")``.
-      "sweep" is
+      where the BNLJ wins stay direct).  "sweep" is
       the output-sensitive sort-sweep kernel (``operators/sweep.py``):
       a single point-in-interval sweep when one side is degenerate (same
       start/stop column), else a general overlap join decomposed into two
@@ -759,9 +733,13 @@ def _bucket_join(
     the candidate pairs cost a full extra shuffle of the match set and
     forced row-id generation; this filter is free and needs no ids.)
 
-    Intervals with an infinite/missing endpoint cannot be bucketized, so
-    both sides must supply finite start and stop columns; otherwise this
-    raises (no automatic fallback — use ``strategy="direct"``).
+    Intervals with a missing endpoint column cannot be bucketized, so both
+    sides must supply start and stop columns; otherwise this raises (no
+    automatic fallback — use ``strategy="direct"``).  Rows whose endpoint
+    VALUE is ±inf or NaN (float columns only) cannot explode into buckets
+    either: they skip bucketing and pair through the plain keyed join with
+    the exact predicate, unioned with the bucketed pairs — such rows are
+    rare, so those joins stay small, and no pair is emitted twice.
 
     **Non-numeric (string) endpoints** are dictionary-encoded first: the
     distinct endpoint values of BOTH sides are ranked into dense
@@ -828,22 +806,27 @@ def _bucket_join(
         l_s, l_t, r_s, r_t = "__lsc__", "__ltc__", "__rsc__", "__rtc__"
         code_cols = ["__lsc__", "__ltc__", "__rsc__", "__rtc__"]
         numeric = lambda frame, c: frame[c]  # noqa: E731 — codes are double
+        lfin = rfin = None  # codes are finite
     else:
         l_s, l_t, r_s, r_t = l_start, l_stop, r_start, r_stop
         code_cols = []
         numeric = lambda frame, c: _bucket_numeric(  # noqa: E731
             frame[c], (lsch if c in lsch else rsch)[c])
+        lfin = _finite_cond(lm, lsch, (l_s, l_t))
+        rfin = _finite_cond(rm, rsch, (r_s, r_t))
 
+    lmb = lm if lfin is None else lm.filter(lfin)
+    rmb = rm if rfin is None else rm.filter(rfin)
     lb = F.explode(F.sequence(
-        F.floor(numeric(lm, l_s) / F.lit(bucket_width)),
-        F.floor(numeric(lm, l_t) / F.lit(bucket_width)),
+        F.floor(numeric(lmb, l_s) / F.lit(bucket_width)),
+        F.floor(numeric(lmb, l_t) / F.lit(bucket_width)),
     )).alias("__bucket__")
     rb = F.explode(F.sequence(
-        F.floor(numeric(rm, r_s) / F.lit(bucket_width)),
-        F.floor(numeric(rm, r_t) / F.lit(bucket_width)),
+        F.floor(numeric(rmb, r_s) / F.lit(bucket_width)),
+        F.floor(numeric(rmb, r_t) / F.lit(bucket_width)),
     )).alias("__bucket__")
-    le = lm.select("*", lb)
-    re_ = rm.select("*", rb)
+    le = lmb.select("*", lb)
+    re_ = rmb.select("*", rb)
     anchor = F.floor(F.greatest(numeric(le, l_s),
                                 numeric(re_, r_s)) / F.lit(bucket_width))
     cond = (le["__bucket__"] == re_["__bucket__"]) & (le["__bucket__"] == anchor)
@@ -852,7 +835,34 @@ def _bucket_join(
     joined = le.join(re_, on=cond, how="inner").drop(le["__bucket__"]).drop(re_["__bucket__"])
     for c in code_cols:
         joined = joined.drop(c)
-    return joined.filter(rng)
+    joined = joined.filter(rng)
+    exact = rng
+    for e in eq:
+        exact = e & exact
+    # non-finite lefts pair with every right; finite lefts additionally
+    # with the non-finite rights the bucket join skipped.  Positional
+    # union: every branch emits lm's then rm's columns, and with on= keys
+    # both carry the key name
+    if lfin is not None:
+        joined = joined.union(lm.filter(~lfin).join(rm, on=exact, how="inner"))
+    if rfin is not None:
+        joined = joined.union(lmb.join(rm.filter(~rfin), on=exact, how="inner"))
+    return joined
+
+
+def _finite_cond(df: DataFrame, sch: dict, cols) -> Optional[Column]:
+    """Every float column of ``df`` among ``cols`` holds a finite value;
+    None when there is no float column (no other type holds ±inf or
+    NaN)."""
+    from pyspark.sql import types as T
+
+    cond = None
+    for c in dict.fromkeys(cols):
+        if isinstance(sch[c], (T.FloatType, T.DoubleType)):
+            # Spark orders NaN above +inf, so this rules NaN out too
+            ok = F.abs(df[c]) < F.lit(float("inf"))
+            cond = ok if cond is None else cond & ok
+    return cond
 
 
 def find_containing_interval(
@@ -882,8 +892,6 @@ def find_containing_interval(
     estimated per-group residual blows past the linear bound; keyless,
     the same rule with G=1 against the higher keyless bound (rescuing
     the large×large broadcast-nested-loop); small inputs stay direct.
-    ``spark.catabra.merge.costAuto=false`` restores the always-direct
-    behavior.
 
     "First"/"last" refer to interval ids: pass ``interval_id`` naming an
     existing id column in ``intervals`` for meaningful results (the reference

@@ -13,8 +13,9 @@ dispatch, and MAX_ROWS chunking all collapse into ONE declarative plan:
     -> groupBy(window_id) with conditional aggregates
     -> left-join back onto windows
 
-Catalyst turns the entity equi-key into a sort-merge/shuffled-hash join with
-the range predicate as residual filter; AQE handles skewed entities.  All
+The join is ``merge_intervals``' (one interval-join path for the engine)
+unless the windows form a regular grid, where window-index arithmetic
+turns it into an equi-join on (entity, index).  All
 standard aggregations (mean/min/max/median/std/var/sum/prod/skew/mad/sem/
 size/count/nunique/pXX) run in a SINGLE shuffle as conditional JVM-side
 aggregates — one pass regardless of how many (attribute, function) pairs are
@@ -49,8 +50,8 @@ from typing import Callable, Mapping, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
-from .sweep import sweep_point_in_interval
-from ..util import as_list, bucket_numeric_double, ensure_columns
+from .merging import merge_intervals
+from ..util import as_list, ensure_columns
 
 # internal content-key column names: entity / window start / window stop
 _KE, _KS, _KP = "__w_ent__", "__w_start__", "__w_stop__"
@@ -65,27 +66,6 @@ _QUANTILE_RE = re.compile(r"^p(\d{1,2}(?:\.\d+)?)$")
 
 def _is_time_like(dt) -> bool:
     return isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType))
-
-
-def _cost_auto_sweep(obs: DataFrame, wjoin: DataFrame,
-                     obs_keys: list, win_keys: list) -> bool:
-    """``join_strategy="auto"``'s cost-based direct-vs-sweep pick — the same
-    few-large-entities detector as ``merge_intervals(strategy="auto")``
-    (``merging._auto_few_large_groups``: optimizer plan statistics first
-    — known row counts often decide with zero jobs — then one concurrent
-    count + approx_count_distinct(entity) pass per side, memoized on the
-    inputs' semanticHash, skipped for tiny inputs, disabled by
-    ``spark.catabra.merge.costAuto=false`` — that knob is THE global
-    cost-auto kill switch).  This is the reference's per-entity strategy
-    selector (reference resampling.py:1271-1281 + _analyze_windows
-    :1717-1816) re-expressed as a global statistics decision: when a few
-    entities own both many windows and many observations, the direct
-    entity equi-join's per-entity window x observation residual goes
-    quadratic (the t4 anchor measured 15x), and the output-sensitive
-    sweep is the plan a user should have picked."""
-    from .merging import _auto_few_large_groups
-
-    return _auto_few_large_groups(obs, wjoin, obs_keys, win_keys)
 
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -237,51 +217,16 @@ def resample_eav(
     TypedImperativeAggregate that buffers every value of a group — at
     extreme per-window observation counts the sketch bounds memory.
 
-    ``bucket_width`` covers the remaining scale hazard — IRREGULAR windows
-    over entities with many windows AND many observations, where the plain
-    entity equi-join degenerates to a per-entity product.  When set (and
-    both endpoints are finite columns), windows explode into time buckets
-    of that width, observations map to their single bucket, and the join
-    runs on (entity, bucket) with the exact endpoint predicate as residual
-    — the same strategy as ``merge_intervals(strategy="bucket")``.  Pick a
-    width near the typical window span; ignored when a regular grid is
-    detected (the grid path is strictly cheaper).
-
-    ``join_strategy="sweep"`` routes the irregular observation-window join
-    through the output-sensitive sort-sweep kernel (``operators/sweep.py``;
-    windows are the intervals, observations the points) — the choice when
-    entities have MANY windows and many observations and no bucket width
-    fits (the same regime as ``merge_intervals(strategy="sweep")``).
-    Mutually exclusive with ``bucket_width``; a detected regular grid
-    still wins (strictly cheaper).  Windows with a null endpoint value
-    match no observation by the join contract and are filtered before the
-    sweep; ±inf endpoint VALUES sort correctly and need no special case.
-
-    ``join_strategy="auto"`` (default): when no regular grid is detected
-    and no ``bucket_width`` is given, a cost-based detector — the same
-    few-large-entities statistics pass as
-    ``merge_intervals(strategy="auto")``, see ``_cost_auto_sweep`` —
-    picks the sweep automatically when the direct entity equi-join's
-    estimated per-entity residual goes quadratic (the reference's
-    per-entity selector, reference resampling.py:1271-1281); healthy
-    many-entity workloads keep the direct plan and pay only a memoized
-    one-row statistics job.  ``spark.catabra.merge.costAuto=false``
-    restores the always-direct pre-r11 behavior.
-
-    **Dtype note — DayTimeIntervalType time axis** (elapsed-time EAV
-    data): all three escape legs support it.  The sweep kernel orders
-    events by the column's natural ordering, no numeric coercion on its
-    path (property-tested against direct:
-    tests/test_dtypes.py::test_resample_eav_interval_time_col_sweep_vs_direct).
-    The ``bucket_width`` leg runs its bucket arithmetic on
-    ``util.bucket_numeric_double`` — intervals normalize to the canonical
-    DAY TO SECOND field range, then truncate to whole seconds, a
-    monotone coercion under which each window's bucket span stays a
-    superset of its true span (bucket ids are in SECONDS for this dtype,
-    so pick ``bucket_width`` in seconds); the exact endpoint predicate
-    runs on the original interval columns as the residual filter
-    (property-tested against direct:
-    tests/test_dtypes.py::test_resample_eav_interval_time_col_bucket_vs_direct).
+    Irregular windows are paired with observations by ONE
+    ``merge_intervals`` inner join (observations are points on the left,
+    windows the intervals on the right), so its strategies and their
+    rules apply: ``bucket_width`` selects ``strategy="bucket"`` with that
+    width (needs both window endpoints), and ``join_strategy``
+    "auto"/"direct"/"sweep" is passed on as ``strategy``; ``"sweep"`` and
+    ``bucket_width`` are mutually exclusive.  A detected or declared
+    regular grid wins over both (strictly cheaper).  On a
+    DayTimeIntervalType time axis bucket ids are in seconds
+    (``util.bucket_numeric_double``), so pick ``bucket_width`` in seconds.
 
     **Skewed entities** (one patient/session owning a large share of the
     observations): measured at 10M observations with one entity holding
@@ -441,64 +386,19 @@ def resample_eav(
             wfast, on=[ofast[entity_col] == wfast[_KE],
                        ofast[IDX] == wfast[IDX]],
             how="inner").drop(ofast[IDX]).drop(wfast[IDX])
-    elif bucket_width is not None:
-        if not (has_start and has_stop):
-            raise ValueError("bucket_width requires both window endpoints")
-        bnum = bucket_numeric_double
-        BKT = "__bucket__"
-        wsch2 = {f.name: f.dataType for f in wjoin.schema.fields}
-        # windows with a non-finite endpoint VALUE (inf in a double column)
-        # cannot explode into buckets — route them through the plain entity
-        # join and union the pairs (half-infinite windows are part of the
-        # operator contract; they are rare, so that side stays small)
-        wlo = bnum(F.col(_KS), wsch2[_KS])
-        whi = bnum(F.col(_KP), wsch2[_KP])
-        wfinite = (wlo > F.lit(float("-inf"))) & (whi < F.lit(float("inf")))
-        wfin = wjoin.filter(wfinite)
-        winf = wjoin.filter(~wfinite | wlo.isNull() | whi.isNull())
-        wb = wfin.withColumn(BKT, F.explode(F.sequence(
-            F.floor(wlo / F.lit(bucket_width)),
-            F.floor(whi / F.lit(bucket_width)))))
-        ob = obs.withColumn(BKT, F.floor(
-            bnum(F.col(time_col), df.schema[time_col].dataType) / F.lit(bucket_width)))
-        resid = ((F.col(time_col) >= F.col(_KS)) if include_start
-                 else (F.col(time_col) > F.col(_KS)))
-        resid = resid & ((F.col(time_col) <= F.col(_KP)) if include_stop
-                         else (F.col(time_col) < F.col(_KP)))
-        pairs_b = (ob.join(wb, on=[ob[entity_col] == wb[_KE], ob[BKT] == wb[BKT]],
-                           how="inner")
-                   .drop(ob[BKT]).drop(wb[BKT])
-                   .filter(resid))
-        cond_i = obs[entity_col] == winf[_KE]
-        cond_i = cond_i & ((obs[time_col] >= winf[_KS]) if include_start
-                           else (obs[time_col] > winf[_KS]))
-        cond_i = cond_i & ((obs[time_col] <= winf[_KP]) if include_stop
-                           else (obs[time_col] < winf[_KP]))
-        pairs = pairs_b.unionByName(obs.join(winf, on=cond_i, how="inner"))
-    elif join_strategy == "sweep" or (
-            join_strategy == "auto"
-            and _cost_auto_sweep(obs, wjoin, [entity_col], [_KE])):
-        # windows are the intervals, observations the points; null-valued
-        # endpoints/keys match nothing under the join contract, so filter
-        # them up front (the sweep's window partitioner would otherwise
-        # group null keys together)
-        ivl = wjoin.filter(F.col(_KE).isNotNull())
-        for c in ([_KS] if has_start else []) + ([_KP] if has_stop else []):
-            ivl = ivl.filter(F.col(c).isNotNull())
-        pts = obs.filter(F.col(entity_col).isNotNull())
-        pairs = sweep_point_in_interval(
-            ivl, pts, [_KE], [entity_col],
-            _KS if has_start else None, _KP if has_stop else None,
-            time_col, include_start=include_start, include_stop=include_stop)
     else:
-        cond = obs[entity_col] == wjoin[_KE]
-        if has_start:
-            cond = cond & ((obs[time_col] >= wjoin[_KS]) if include_start
-                           else (obs[time_col] > wjoin[_KS]))
-        if has_stop:
-            cond = cond & ((obs[time_col] <= wjoin[_KP]) if include_stop
-                           else (obs[time_col] < wjoin[_KP]))
-        pairs = obs.join(wjoin, on=cond, how="inner")
+        # irregular windows: merge_intervals' interval join, observations
+        # as points on the left, windows (intervals) on the right
+        if bucket_width is not None and not (has_start and has_stop):
+            raise ValueError("bucket_width requires both window endpoints")
+        pairs = merge_intervals(
+            obs, wjoin, left_on=[entity_col], right_on=[_KE], how="inner",
+            left_start=time_col, left_stop=time_col,
+            right_start=_KS if has_start else None,
+            right_stop=_KP if has_stop else None,
+            include_right_start=include_start, include_right_stop=include_stop,
+            strategy="bucket" if bucket_width is not None else join_strategy,
+            bucket_width=bucket_width)
 
     attr = F.col(attribute_col)
     val = F.col(value_col)
@@ -848,28 +748,13 @@ def resample_interval(
     Window/interval overlap is evaluated with closed endpoints
     (``resampling.py:478-480,493-495``).
 
-    Implementation: one entity equi-join with the overlap residual, a
-    ``when()`` cascade for the factor, one pivoted sum — two shuffles total.
-
-    ``bucket_width`` (optional, needs both window endpoints): bucketized
-    range join for entities with many windows AND many observation
-    intervals, where the entity equi-join degenerates to a per-entity
-    product.  Both sides explode into time buckets of that width, the join
-    runs on (entity, bucket), and each overlapping pair is emitted exactly
-    once — from the single bucket containing ``max(obs.start, win.start)``
-    (the anchor trick of ``merge_intervals``' bucket strategy, so no dedup
-    shuffle).
-
-    ``join_strategy="sweep"`` instead delegates the pair join to
-    ``merge_intervals(strategy="sweep")`` — the output-sensitive kernel for
-    the same many-windows-times-many-intervals regime when no bucket width
-    fits.  Mutually exclusive with ``bucket_width``.
-
-    ``join_strategy="auto"`` (default): with no ``bucket_width``, the same
-    cost-based few-large-entities detector as ``resample_eav`` /
-    ``merge_intervals`` (``_cost_auto_sweep``) flips to the sweep when the
-    direct entity equi-join's estimated per-entity residual goes
-    quadratic; ``spark.catabra.merge.costAuto=false`` disables it.
+    Implementation: one ``merge_intervals`` inner join of observation
+    intervals and windows on the entity key, a ``when()`` cascade for the
+    factor, one pivoted sum.  ``bucket_width`` selects its
+    ``strategy="bucket"`` (needs both window endpoints), ``join_strategy``
+    "auto"/"direct"/"sweep" is passed on as ``strategy``; ``"sweep"`` and
+    ``bucket_width`` are mutually exclusive.  Empty windows (null
+    endpoint, start > stop) match nothing and get 0.
 
     **Dtype note — DayTimeIntervalType start/stop** (elapsed-time
     observation intervals; reference dtype contract "float, int, time
@@ -881,9 +766,8 @@ def resample_interval(
     follows the observation start column; windows must use the same
     family (mixed end FIELDS are fine — both comparison coercion and the
     extraction normalize to DAY TO SECOND).  ``epsilon`` stays in
-    seconds.  All three legs (direct/bucket/sweep) support the dtype;
-    bucket ids use the monotone truncating view with the exact residual,
-    so ``bucket_width`` is in seconds here too.
+    seconds, and so is ``bucket_width`` (bucket ids use the monotone
+    truncating view, the exact predicate the original columns).
     """
     if join_strategy not in ("auto", "direct", "sweep"):
         raise ValueError(f"join_strategy must be auto/direct/sweep, got {join_strategy!r}")
@@ -950,81 +834,22 @@ def resample_interval(
     obs = (
         df.select(entity_col, start_col, stop_col, attribute_col, value_col)
         .filter(F.col(attribute_col).isin(attributes))
-        .filter(F.col(start_col).isNotNull() & F.col(stop_col).isNotNull()
-                & (F.col(start_col) <= F.col(stop_col)))
     )
 
     wjoin = win.select(*key_cols)
     if not assume_unique_windows:
         wjoin = wjoin.distinct()
-    if bucket_width is not None:
-        if not (has_start and has_stop):
-            raise ValueError("bucket_width requires both window endpoints")
-        bnum = bucket_numeric_double
-        BKT = "__bucket__"
-        wsch2 = {f.name: f.dataType for f in wjoin.schema.fields}
-        W = F.lit(bucket_width)
-        # non-finite endpoints cannot explode into buckets, on either side:
-        # infinite observation intervals are a documented reference semantic
-        # (the epsilon rule) and half-infinite windows are part of the
-        # operator contract.  Both route through the plain entity join and
-        # union back in — they are rare by nature, so those sides stay tiny.
-        lo = bnum(F.col(start_col), sch[start_col])
-        hi = bnum(F.col(stop_col), sch[stop_col])
-        finite = (lo > F.lit(float("-inf"))) & (hi < F.lit(float("inf")))
-        obf = obs.filter(finite)
-        obi = obs.filter(~finite)
-        wlo = bnum(F.col(_KS), wsch2[_KS])
-        whi = bnum(F.col(_KP), wsch2[_KP])
-        wfinite = (wlo > F.lit(float("-inf"))) & (whi < F.lit(float("inf")))
-        wfin = wjoin.filter(wfinite)
-        winf = wjoin.filter(~wfinite | wlo.isNull() | whi.isNull())
-        wb = wfin.withColumn(BKT, F.explode(F.sequence(
-            F.floor(wlo / W), F.floor(whi / W))))
-        obx = obf.withColumn(BKT, F.explode(F.sequence(
-            F.floor(lo / W), F.floor(hi / W))))
-        anchor = F.floor(F.greatest(bnum(obx[start_col], sch[start_col]),
-                                    bnum(wb[_KS], wsch2[_KS])) / W)
-        pairs_b = (obx.join(wb, on=[obx[entity_col] == wb[_KE],
-                                    obx[BKT] == wb[BKT],
-                                    obx[BKT] == anchor],
-                            how="inner")
-                   .drop(obx[BKT]).drop(wb[BKT])
-                   .filter((F.col(_KS) <= F.col(stop_col))
-                           & (F.col(start_col) <= F.col(_KP))))
-
-        def plain(o, w):
-            cond = ((o[entity_col] == w[_KE])
-                    & (w[_KS] <= o[stop_col]) & (o[start_col] <= w[_KP]))
-            return o.join(w, on=cond, how="inner")
-
-        # obi pairs with every window; obf additionally with the non-finite
-        # windows the bucket join skipped — no pair appears twice
-        pairs = (pairs_b
-                 .unionByName(plain(obi, wjoin))
-                 .unionByName(plain(obf, winf)))
-    elif join_strategy == "sweep" or (
-            join_strategy == "auto"
-            and _cost_auto_sweep(obs, wjoin, [entity_col], [_KE])):
-        # the observation-window overlap IS a merge_intervals inner join
-        # with closed endpoints and distinct key names on both sides —
-        # delegate to the sweep strategy (its validity filters drop the
-        # null-endpoint windows the plain join's null predicate would skip,
-        # and +/-inf endpoint VALUES order correctly through the sweep)
-        from .merging import merge_intervals
-        pairs = merge_intervals(
-            obs, wjoin, left_on=[entity_col], right_on=[_KE], how="inner",
-            left_start=start_col, left_stop=stop_col,
-            right_start=_KS if has_start else None,
-            right_stop=_KP if has_stop else None,
-            strategy="sweep")
-    else:
-        cond = obs[entity_col] == wjoin[_KE]
-        if has_start:
-            cond = cond & (wjoin[_KS] <= obs[stop_col])
-        if has_stop:
-            cond = cond & (obs[start_col] <= wjoin[_KP])
-        pairs = obs.join(wjoin, on=cond, how="inner")
+    if bucket_width is not None and not (has_start and has_stop):
+        raise ValueError("bucket_width requires both window endpoints")
+    # closed endpoints on both sides (reference resampling.py:478-480,
+    # 493-495); merge_intervals drops empty intervals on either side
+    pairs = merge_intervals(
+        obs, wjoin, left_on=[entity_col], right_on=[_KE], how="inner",
+        left_start=start_col, left_stop=stop_col,
+        right_start=_KS if has_start else None,
+        right_stop=_KP if has_stop else None,
+        strategy="bucket" if bucket_width is not None else join_strategy,
+        bucket_width=bucket_width)
 
     a = num(F.col(start_col))
     b = num(F.col(stop_col))

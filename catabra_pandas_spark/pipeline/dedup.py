@@ -248,7 +248,6 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 42,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash LSH: band the signature, bucket-join
     on (band_index, band_hash), estimate Jaccard as signature agreement,
@@ -260,17 +259,15 @@ def minhash_near_dup_pairs(
 
     The signature table is consumed FOUR times (both band-join sides, both
     re-scoring joins) and Spark's exchange reuse does not fire across the
-    differing consumers, so by default it is materialized once with an
-    eager ``localCheckpoint`` (~0.5 KB/doc — far smaller than re-running
-    the shingle aggregation 4x).  ``cache_signatures=False`` keeps the
-    operator fully lazy.
+    differing consumers, so it is materialized once with an eager
+    ``localCheckpoint`` (~0.5 KB/doc — far smaller than re-running the
+    shingle aggregation 4x).
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, seed)
-    if cache_signatures:
-        sig = sig.localCheckpoint(eager=True)
+    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, seed) \
+        .localCheckpoint(eager=True)
     # candidate generation over bare (id, band, hash) rows: the band
     # self-join exchange carries 3 scalars per row, never the signature
     # array (which would be duplicated `bands` times through the shuffle);
@@ -399,7 +396,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 4,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming on 64-bit
     SimHash.  Pigeonhole candidate generation: split the hash into
@@ -409,10 +405,8 @@ def simhash_near_dup_pairs(
 
     Both self-join sides re-evaluate the signature aggregation (no
     exchange reuse fires), so the (id, simhash) table — 16 bytes/doc — is
-    materialized once by default; ``cache_signatures=False`` stays lazy."""
-    sh = simhash(df, text_col, id_col)
-    if cache_signatures:
-        sh = sh.localCheckpoint(eager=True)
+    materialized once."""
+    sh = simhash(df, text_col, id_col).localCheckpoint(eager=True)
     width = 64 // blocks
     blocked = sh.select(
         id_col, "simhash",
@@ -740,7 +734,6 @@ def minhash_cross_dup_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     broadcast_other: bool = True,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """CROSS-corpus near-duplicate pairs by MinHash LSH: corpus documents
     whose estimated Jaccard against some ``other``-corpus document (an eval
@@ -769,11 +762,10 @@ def minhash_cross_dup_pairs(
             )).alias("band_idx", "band_hash"),
         )
 
-    sig_c = minhash_signatures(corpus, text_col, id_col, k, num_hashes, seed)
-    if cache_signatures:
-        # the corpus signature table feeds both the band join and the
-        # re-scoring join; materialize it once (~0.5 KB/doc)
-        sig_c = sig_c.localCheckpoint(eager=True)
+    # the corpus signature table feeds both the band join and the
+    # re-scoring join; materialize it once (~0.5 KB/doc)
+    sig_c = minhash_signatures(corpus, text_col, id_col, k, num_hashes,
+                               seed).localCheckpoint(eager=True)
     sig_o_full = minhash_signatures(other, ot, oi, k, num_hashes, seed) \
         .withColumnRenamed(oi, "other_id")
     bc = banded(sig_c, id_col).withColumnRenamed(id_col, "corpus_id")

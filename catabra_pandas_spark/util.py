@@ -13,11 +13,14 @@
 
 from __future__ import annotations
 
+import logging
 from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 ROW_ID = "__row_id__"
+
+_log = logging.getLogger(__name__)
 
 
 def numeric_double(c: Column, dt) -> Column:
@@ -54,9 +57,9 @@ def bucket_numeric_double(c: Column, dt) -> Column:
     predicate.  Deliberately separate from ``numeric_double``:
     tolerance/grid arithmetic (asof, regular-grid resample) needs exact
     values, and a truncating coercion there would silently move
-    sub-second matches.  Shared by ``merge_intervals(strategy="bucket")``
-    and the ``bucket_width`` legs of ``resample_eav`` /
-    ``resample_interval``."""
+    sub-second matches.  Used by ``merge_intervals(strategy="bucket")``,
+    which the ``bucket_width`` option of ``resample_eav`` /
+    ``resample_interval`` selects."""
     from pyspark.sql import types as T
 
     if isinstance(dt, T.DayTimeIntervalType):
@@ -128,8 +131,9 @@ def release_local_checkpoint(df) -> None:
     handle and is left to the ContextCleaner."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as e:
+        _log.debug("release_local_checkpoint: blocks left to the "
+                   "ContextCleaner (%s)", e)
 
 
 def exact_numeric_double(c: Column, dt) -> Column:

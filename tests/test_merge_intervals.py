@@ -678,8 +678,6 @@ def test_auto_strategy_cost_detector(spark):
     import numpy as np
     import pandas as pd
 
-    from catabra_pandas_spark.operators import merging as M
-
     rng = np.random.RandomState(3)
     nl, nr = 60_000, 30_000
     lp = pd.DataFrame({"group": rng.randint(0, 3, nl),
@@ -708,18 +706,6 @@ def test_auto_strategy_cost_detector(spark):
     assert merge_intervals(l3, r3, **kw).sameSemantics(
         merge_intervals(l3, r3, strategy="direct", **kw))
 
-    # decision is memoized on the inputs' semanticHash
-    ck = (l.semanticHash(), r.semanticHash(), ("group",), ("group",))
-    assert M._AUTO_CACHE.get(ck) is True
-
-    # kill switch restores the pre-r11 auto (always direct)
-    spark.conf.set("spark.catabra.merge.costAuto", "false")
-    try:
-        assert merge_intervals(l, r, **kw).sameSemantics(
-            merge_intervals(l, r, strategy="direct", **kw))
-    finally:
-        spark.conf.set("spark.catabra.merge.costAuto", "true")
-
     # half-infinite endpoints and degenerate sides with exclusive flags
     # are outside the sweep preconditions: auto never raises, runs direct
     assert merge_intervals(l, r, on="group", how="inner",
@@ -735,7 +721,7 @@ def test_find_containing_auto_strategy(spark):
     """find_containing_interval defaults to strategy="auto" (r11): on the
     few-large-groups shape the cost detector routes the internal
     point-in-interval join through the sweep, with values identical to
-    direct; keyless calls and the kill switch stay on the direct plan."""
+    direct; small keyless calls stay on the direct plan."""
     import numpy as np
     import pandas as pd
 
@@ -775,12 +761,6 @@ def test_find_containing_auto_strategy(spark):
         find_containing_interval(
             spts.select("p").limit(500), sivl.select("start", "stop", "iid"),
             point_cols="p", interval_id="iid", strategy="direct"))
-
-    spark.conf.set("spark.catabra.merge.costAuto", "false")
-    try:
-        assert find_containing_interval(spts, sivl, **kw).sameSemantics(direct)
-    finally:
-        spark.conf.set("spark.catabra.merge.costAuto", "true")
 
 
 def test_auto_strategy_keyless_rescue(spark):
@@ -861,7 +841,6 @@ def test_auto_detector_plan_time_short_circuit(spark, monkeypatch):
     monkeypatch.setattr(M, "_AUTO_TINY_BYTES", 1)
 
     def probe(l, r, keyed):
-        M._AUTO_CACHE.clear()
         del calls[:]
         on = ["g"] if keyed else []
         dec = M._auto_few_large_groups(l, r, on, on)

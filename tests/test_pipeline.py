@@ -2912,21 +2912,24 @@ def test_ngram_cap_skew_leg_matches_window_leg(spark, monkeypatch):
     assert len(small) > 0
 
 
-def _n_stored_rdds(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+def _stored_rdd_ids(spark) -> set:
+    return {int(i.id())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
-def _wait_stored_rdds(spark, target: int, timeout: float = 10.0) -> int:
-    """unpersist(blocking=False) is async: poll until the storage count
-    drops to `target` (or the timeout expires)."""
+def _new_stored_rdds(spark, before: set, timeout: float = 10.0) -> set:
+    """Ids of RDDs stored now that were not stored in the ``before``
+    snapshot.  unpersist(blocking=False) is async, so poll until none is
+    left (or the timeout expires).  Comparing ids, not counts, keeps
+    unrelated RDDs released meanwhile from masking a leak."""
     import time
 
-    n = _n_stored_rdds(spark)
     t0 = time.time()
-    while n > target and time.time() - t0 < timeout:
+    new = _stored_rdd_ids(spark) - before
+    while new and time.time() - t0 < timeout:
         time.sleep(0.2)
-        n = _n_stored_rdds(spark)
-    return n
+        new = _stored_rdd_ids(spark) - before
+    return new
 
 
 def test_kmeans_codebook_cache_released_on_failure(spark):
@@ -2936,7 +2939,7 @@ def test_kmeans_codebook_cache_released_on_failure(spark):
     the try/finally must still unpersist it."""
     from catabra_pandas_spark.pipeline import kmeans_codebook
 
-    before = _n_stored_rdds(spark)
+    before = _stored_rdd_ids(spark)
     vecs = [[float(i), float(i + 1)] for i in range(12)]
     vecs[7] = [1.0, 2.0, 3.0]  # ragged: breaks np.asarray(...).shape
     sdf = spark.createDataFrame(
@@ -2944,7 +2947,7 @@ def test_kmeans_codebook_cache_released_on_failure(spark):
         "vec_id long, embedding array<double>")
     with pytest.raises(Exception):
         kmeans_codebook(sdf, n_centroids=2, n_iter=2, dim=2)
-    assert _wait_stored_rdds(spark, before) == before
+    assert _new_stored_rdds(spark, before) == set()
 
 
 def test_train_ngram_lm_releases_cache(spark, monkeypatch):
@@ -2962,14 +2965,14 @@ def test_train_ngram_lm_releases_cache(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " * 3)
          for i in range(50)], "doc_id long, text string")
-    before = _n_stored_rdds(spark)
+    before = _stored_rdd_ids(spark)
     monkeypatch.setattr(U, "materialization_gate", lambda df, **k: True)
     model = train_ngram_lm(docs)
     assert model["unigrams"]["the"] > 0
-    assert _wait_stored_rdds(spark, before) == before
+    assert _new_stored_rdds(spark, before) == set()
     tgt, raw = train_ngram_lm_pair(docs, F.col("doc_id") % 2 == 0)
     assert raw == model
-    assert _wait_stored_rdds(spark, before) == before
+    assert _new_stored_rdds(spark, before) == set()
 
 
 def test_train_ngram_lm_gate_legs_identical(spark, monkeypatch):

@@ -19,6 +19,14 @@ _keys = st.integers(min_value=0, max_value=2)
 
 _left_rows = st.lists(st.tuples(_keys, _vals, _vals), min_size=0, max_size=12)
 _right_rows = st.lists(st.tuples(_keys, _vals, _vals), min_size=0, max_size=8)
+# with infinite endpoint VALUES, which the bucket strategy cannot explode
+# into buckets and must pair through the plain keyed join instead
+_vals_inf = st.sampled_from([float("-inf"), 0.0, 1.0, 1.5, 2.5, 4.0, 7.5,
+                             10.0, float("inf")])
+_left_rows_inf = st.lists(st.tuples(_keys, _vals_inf, _vals_inf),
+                          min_size=0, max_size=12)
+_right_rows_inf = st.lists(st.tuples(_keys, _vals_inf, _vals_inf),
+                           min_size=0, max_size=8)
 
 
 @settings(max_examples=12, deadline=None)
@@ -115,15 +123,18 @@ def test_merge_asof_tolerance_matches_pandas(spark, left, right, direction,
 
 
 @settings(max_examples=8, deadline=None)
-@given(obs=st.lists(st.tuples(_keys, _vals, _vals), min_size=0, max_size=14),
-       wins=st.lists(st.tuples(_keys, _vals, _vals), min_size=1, max_size=8),
+@given(obs=st.lists(st.tuples(_keys, _vals_inf, _vals), min_size=0,
+                   max_size=14),
+       wins=st.lists(st.tuples(_keys, _vals_inf, _vals_inf), min_size=1,
+                     max_size=8),
        width=st.sampled_from([0.5, 3.0, 50.0]))
 def test_resample_eav_bucket_matches_direct(spark, obs, wins, width):
     """resample_eav's bucket_width scale path vs the direct join under
     ADVERSARIAL widths (far below / near / far above the window spans) on
     random irregular windows — same count/sum/min/max per window
     required.  Windows with start > stop are empty by the join contract
-    and still emit (count 0)."""
+    and still emit (count 0); ±inf observation times and window endpoints
+    bypass the buckets."""
     from catabra_pandas_spark import resample_eav
 
     osdf = spark.createDataFrame(
@@ -249,7 +260,7 @@ def test_funnel_hot_entity_skew(spark):
 
 
 @settings(max_examples=10, deadline=None)
-@given(left=_left_rows, right=_right_rows,
+@given(left=_left_rows_inf, right=_right_rows_inf,
        inc=st.tuples(st.booleans(), st.booleans(), st.booleans(),
                      st.booleans()),
        width=st.sampled_from([0.5, 2.0, 11.0]))
@@ -257,8 +268,9 @@ def test_merge_bucket_matches_direct(spark, left, right, inc, width):
     """strategy="bucket" (explode to width-W buckets, emit from the one
     bucket holding max(l_start, r_start)) completes the three-strategy
     equivalence matrix: its match set must equal the direct join's under
-    random inclusion flags and bucket widths both narrower and wider
-    than every interval."""
+    random inclusion flags, bucket widths both narrower and wider than
+    every interval, and ±inf endpoint values (paired by the plain keyed
+    join, not bucketed)."""
     ils, ilp, irs, irp = inc
     lsdf = spark.createDataFrame([(int(k), float(a), float(b))
                                   for k, a, b in left],

@@ -641,6 +641,25 @@ def test_resample_interval_sweep_join_strategy(spark):
     pd.testing.assert_frame_equal(a2, b2, check_like=True, atol=1e-9)
 
 
+def test_resample_interval_empty_window_all_legs(spark):
+    """A window with start > stop is empty (merge_intervals' rule,
+    reference merging.py:230-288): it matches no observation interval and
+    gets 0 on the direct, bucket and sweep legs alike, instead of a
+    negative overlap weight."""
+    obs = pd.DataFrame({"entity": [1], "start": [2.0], "stop": [7.0],
+                        "attribute": ["x"], "value": [1.0]})
+    win = pd.DataFrame({"entity": [1, 1], "t_start": [5.0, 1.0],
+                        "t_stop": [4.0, 3.0]})
+    sobs, swin = to_sdf(spark, obs), to_sdf(spark, win)
+    kw = dict(attributes=["x"], time_col="t", window_start_col="t_start",
+              window_stop_col="t_stop")
+    for leg in (dict(join_strategy="direct"), dict(join_strategy="sweep"),
+                dict(bucket_width=1.0)):
+        out = resample_interval(sobs, swin, **leg, **kw).toPandas()
+        got = dict(zip(out["t_start"], out["x"]))
+        assert got == pytest.approx({5.0: 0.0, 1.0: 0.2}), leg
+
+
 def test_resample_eav_auto_strategy(spark):
     """join_strategy="auto" (r11): on the few-large-entities shape the
     cost detector (shared with merge_intervals) routes the irregular
@@ -695,13 +714,6 @@ def test_resample_eav_auto_strategy(spark):
         resample_eav(og, sg, spec, assume_unique_windows=True,
                      join_strategy="direct"))  # grid path on BOTH sides
 
-    # kill switch restores the pre-r11 auto (always direct)
-    spark.conf.set("spark.catabra.merge.costAuto", "false")
-    try:
-        assert resample_eav(o, w, spec, **kw).sameSemantics(direct)
-    finally:
-        spark.conf.set("spark.catabra.merge.costAuto", "true")
-
 
 def test_resample_interval_auto_strategy(spark):
     """resample_interval join_strategy="auto" (r11): same cost detector;
@@ -743,9 +755,10 @@ def test_resample_interval_auto_strategy(spark):
 
 
 def test_resample_eav_auto_strategy_one_sided_windows(spark):
-    """The cost detector can route a windows frame with only ONE endpoint
-    column (half-infinite windows) into the sweep leg — pin that the
-    one-sided sweep agrees with direct under the auto pick."""
+    """A windows frame with only ONE endpoint column (half-infinite
+    windows) is outside the cost detector's preconditions (merge_intervals'
+    auto needs four endpoint columns), so auto runs direct; the pinned
+    one-sided sweep agrees with it."""
     rng = np.random.RandomState(3)
     n, m = 40_000, 30_000
     obs = pd.DataFrame({
@@ -758,12 +771,11 @@ def test_resample_eav_auto_strategy_one_sided_windows(spark):
     o, w = spark.createDataFrame(obs), spark.createDataFrame(win)
     spec = {"hr": ["count"]}
     kw = dict(regular=False, assume_unique_windows=True)
-    auto = resample_eav(o, w, spec, **kw)
-    assert auto.sameSemantics(
-        resample_eav(o, w, spec, join_strategy="sweep", **kw))
     direct = resample_eav(o, w, spec, join_strategy="direct", **kw)
-    assert not auto.sameSemantics(direct)
-    a = auto.toPandas().sort_values(
+    assert resample_eav(o, w, spec, **kw).sameSemantics(direct)
+    sweep = resample_eav(o, w, spec, join_strategy="sweep", **kw)
+    assert not sweep.sameSemantics(direct)
+    a = sweep.toPandas().sort_values(
         ["entity", "timestamp_start"]).reset_index(drop=True)
     d = direct.toPandas().sort_values(
         ["entity", "timestamp_start"]).reset_index(drop=True)
