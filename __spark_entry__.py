@@ -452,10 +452,10 @@ def q_merge_timedelta_bucket(spark, sf):
     semantics as q_merge_timedelta_intervals, strategy="bucket" with a
     7-second width chosen to MISALIGN with the 5-second duration ranges,
     so matches routinely span bucket boundaries and the single-anchor
-    dedup rule is exercised.  DayTimeIntervalType coerces via
-    CAST(.. AS BIGINT) total seconds (numeric_double, util.py) — monotone
-    truncation; the exact comparisons run on the original interval
-    columns as the residual predicate."""
+    dedup rule is exercised.  DayTimeIntervalType coerces to exact total
+    seconds (exact_numeric_double, util.py), which is monotone; the
+    exact comparisons run on the original interval columns as the
+    residual predicate."""
     li = read_table(spark, sf, "lineitem").select(
         "l_orderkey", "l_linenumber",
         F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0),
@@ -4433,6 +4433,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # merge_indexers and merge_keep_both, so they swap INTO the window for
     # ngram_jaccard, sample_stratified and pack_sequences, whose exercised
     # code is unchanged since their green rows (rotation_check-verified).
+    #
+    # Resampling-on-one-path amendment (one regular-grid leg, exact
+    # bucket coercion, interval_total_seconds/_micros sharing one decimal
+    # sum): the util edit reaches merge_asof, merge_asof_timedelta and
+    # stream_asof, so they swap INTO the window for kmeans_ann, q8_ann
+    # and mix_corpora, whose exercised code is unchanged since their
+    # green rows (rotation_check-verified).
     return {
         "merge_overlap": q_merge_overlap,
         "merge_open_endpoints": q_merge_open_endpoints,
@@ -4475,11 +4482,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash": q_simhash,
         "substring_dedup": q_substring_dedup,
         "substring_removal": q_substring_removal,
-        "kmeans_ann": q_kmeans_ann,
-        "q8_ann": q_q8_ann,
+        "merge_asof": q_merge_asof,
+        "merge_asof_timedelta": q_merge_asof_timedelta,
         "merge_indexers": q_merge_indexers,
         "heavy_hitters": q_heavy_hitters,
-        "mix_corpora": q_mix_corpora,
+        "stream_asof": q_stream_asof,
         "make_windows": q_make_windows,
         "quantile_sketch": q_quantile_sketch,
         "dedup_clusters": q_dedup_clusters,
@@ -4513,9 +4520,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_ann": q_ivf_ann,
         "lsh_ann": q_lsh_ann,
         "zorder": q_zorder,
-        "stream_asof": q_stream_asof,
-        "merge_asof": q_merge_asof,
-        "merge_asof_timedelta": q_merge_asof_timedelta,
+        "mix_corpora": q_mix_corpora,
+        "kmeans_ann": q_kmeans_ann,
+        "q8_ann": q_q8_ann,
         "bloom_prejoin": q_bloom_prejoin,
         "bpe_tokens": q_bpe_tokens,
         "bpe_train": q_bpe_train,

@@ -23,7 +23,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..util import ensure_columns
+from ..util import ensure_columns, numeric_double
 
 
 def funnel(
@@ -54,8 +54,7 @@ def funnel(
     from pyspark.sql import types as T
     dt = {f.name: f.dataType for f in df.schema.fields}[time_col]
     is_ts = isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType))
-    t = (F.col(time_col).cast("timestamp").cast("double") if is_ts
-         else F.col(time_col).cast("double"))
+    t = numeric_double(F.col(time_col), dt)
 
     # events of relevant types only — the filter prunes every round's scan
     ev = df.filter(F.col(type_col).isin(list(steps))).select(

@@ -46,9 +46,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .sweep import sweep_point_in_interval
-from ..util import (as_list, ensure_columns, interval_overlap_cond,
-                    numeric_double as _numeric, plan_stats,
-                    valid_interval_cond)
+from ..util import (as_list, ensure_columns, exact_numeric_double,
+                    interval_overlap_cond, plan_stats, valid_interval_cond)
 
 LEFT_ID = "__left_row_id__"
 RIGHT_ID = "__right_row_id__"
@@ -128,18 +127,10 @@ def _auto_few_large_groups(left: DataFrame, right: DataFrame,
     persist them or pin ``strategy=`` explicitly: the measured pass
     re-executes the input plan once.
     """
-
-    def _opt_stats(df):
-        try:
-            return plan_stats(df)
-        except Exception:
-            return None, None
-
-    (rl, bl), (rr, br) = _opt_stats(left), _opt_stats(right)
+    (rl, bl), (rr, br) = plan_stats(left), plan_stats(right)
     ratio = _AUTO_RATIO if left_on else _AUTO_RATIO_KEYLESS
     decision = False
-    need_jobs = not ((bl is not None and bl < _AUTO_TINY_BYTES)
-                     or (br is not None and br < _AUTO_TINY_BYTES))
+    need_jobs = not (bl < _AUTO_TINY_BYTES or br < _AUTO_TINY_BYTES)
     if need_jobs:
         # Plan-time algebra on known row counts (None = unknown, never
         # zero).  min-side bound: sweep needs n*m/G > ratio*(n+m) with
@@ -164,18 +155,15 @@ def _auto_few_large_groups(left: DataFrame, right: DataFrame,
 
         # Both one-row agg jobs submitted concurrently: Spark schedules
         # jobs from separate threads independently, so the wall cost is
-        # the slower scan, not the sum of the two.
-        try:
-            from concurrent.futures import ThreadPoolExecutor
+        # the slower scan, not the sum of the two.  A failing stats job
+        # raises: a silent direct pick would hide the broken input.
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_l = ex.submit(_stats, left, left_on)
-                fut_r = ex.submit(_stats, right, right_on)
-                n, gl = fut_l.result()
-                m, gr = fut_r.result()
-        except Exception:
-            n = m = 0
-            gl = gr = 1
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            fut_l = ex.submit(_stats, left, left_on)
+            fut_r = ex.submit(_stats, right, right_on)
+            n, gl = fut_l.result()
+            m, gr = fut_r.result()
         g = max(1, min(gl, gr))
         decision = (n > 0 and m > 0
                     and float(n) * float(m) / g > ratio * (n + m))
@@ -702,17 +690,6 @@ def merge_intervals(
     return matched
 
 
-def _bucket_numeric(c: Column, dt) -> Column:
-    """Monotone double view for BUCKET arithmetic only — the shared
-    ``util.bucket_numeric_double`` (DayTimeIntervalType normalizes to the
-    canonical DAY TO SECOND field range before the truncating bigint
-    cast; see that docstring for the monotonicity argument and why it is
-    deliberately separate from the exact ``numeric_double``)."""
-    from ..util import bucket_numeric_double
-
-    return bucket_numeric_double(c, dt)
-
-
 def _bucket_join(
     lm: DataFrame,
     rm: DataFrame,
@@ -810,7 +787,7 @@ def _bucket_join(
     else:
         l_s, l_t, r_s, r_t = l_start, l_stop, r_start, r_stop
         code_cols = []
-        numeric = lambda frame, c: _bucket_numeric(  # noqa: E731
+        numeric = lambda frame, c: exact_numeric_double(  # noqa: E731
             frame[c], (lsch if c in lsch else rsch)[c])
         lfin = _finite_cond(lm, lsch, (l_s, l_t))
         rfin = _finite_cond(rm, rsch, (r_s, r_t))

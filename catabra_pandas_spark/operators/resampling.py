@@ -51,7 +51,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from .merging import merge_intervals
-from ..util import as_list, ensure_columns
+from .modes import grouped_mode
+from ..util import as_list, ensure_columns, exact_numeric_double
 
 # internal content-key column names: entity / window start / window stop
 _KE, _KS, _KP = "__w_ent__", "__w_start__", "__w_stop__"
@@ -140,6 +141,37 @@ def _detect_regular_grid(wjoin: DataFrame) -> Optional[tuple[int, int]]:
     return int(stats.o), int(stats.d)
 
 
+def _window_keys(windows: DataFrame, entity_col: str, ws: str, wp: str,
+                 assume_unique_windows: bool, bucket_width: Optional[float],
+                 join_strategy: str) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Check a resample call's window options and key its windows by
+    content (module docstring "Determinism").  Returns ``(win, wjoin,
+    key_cols)``: the windows with the ``_KE``/``_KS``/``_KP`` key columns
+    attached, the key projection the join reads (``distinct()`` so
+    duplicate windows do not double-count observations, unless
+    ``assume_unique_windows``), and the key column names.  A missing
+    endpoint column ``ws``/``wp`` is infinite and gets no key column."""
+    if join_strategy not in ("auto", "direct", "sweep"):
+        raise ValueError(f"join_strategy must be auto/direct/sweep, got {join_strategy!r}")
+    if join_strategy == "sweep" and bucket_width is not None:
+        raise ValueError("join_strategy='sweep' and bucket_width are mutually exclusive")
+    ensure_columns(windows, [entity_col])
+    key_map = {_KE: F.col(entity_col)}
+    if ws in windows.columns:
+        key_map[_KS] = F.col(ws)
+    if wp in windows.columns:
+        key_map[_KP] = F.col(wp)
+    if len(key_map) == 1:
+        raise ValueError(f"windows needs at least one of {ws!r}, {wp!r}")
+    if bucket_width is not None and len(key_map) < 3:
+        raise ValueError("bucket_width requires both window endpoints")
+    win = windows.withColumns(key_map)
+    wjoin = win.select(*key_map)
+    if not assume_unique_windows:
+        wjoin = wjoin.distinct()
+    return win, wjoin, list(key_map)
+
+
 def resample_eav(
     df: DataFrame,
     windows: Union[DataFrame, "make_windows", Callable[[DataFrame], DataFrame]],
@@ -194,21 +226,23 @@ def resample_eav(
 
     ``regular="auto"`` (default) probes the windows frame for an aligned
     constant-duration grid (the reference's regular-window fast path,
-    ``resampling.py:1738-1763``); if found, each observation's window is
-    assigned by floor-division and the interval theta-join becomes a plain
-    (entity, window_index) equi-join — the dominant shape at scale
-    (tumbling windows).  The probe costs one small aggregate job over the
-    windows frame at call time; pass ``regular=False`` to skip it (e.g.
-    when windows are known-irregular or the windows plan is expensive to
-    evaluate twice), or ``regular=(origin, duration)`` (long units: epoch
-    micros for time-like endpoints, total micros for day-time-interval
-    axes, raw values for integral ones) to take
-    the fast path with NO probe when the grid is known a priori — results
-    are wrong if the declared grid does not match the windows.
-    ``regular=(origin, duration, stride)`` additionally covers SLIDING
-    regular windows (stride < duration): each observation enumerates its
-    ~duration/stride candidate windows arithmetically and the exact
-    endpoint predicate runs as a residual filter after the equi-join.
+    ``resampling.py:1738-1763``); if found, window assignment becomes
+    arithmetic and the interval theta-join a plain (entity, window_index)
+    equi-join — the dominant shape at scale (tumbling windows).  The probe
+    costs one small aggregate job over the windows frame at call time;
+    pass ``regular=False`` to skip it (e.g. when windows are
+    known-irregular or the windows plan is expensive to evaluate twice),
+    or ``regular=(origin, duration[, stride])`` (long units: epoch micros
+    for time-like endpoints, total micros for day-time-interval axes, raw
+    values for integral ones) to take the grid leg with NO probe when the
+    grid is known a priori — windows then start at ``origin + k *
+    stride`` (``stride`` defaults to ``duration``: tumbling; a smaller
+    stride gives SLIDING windows).  One leg serves every grid: each
+    observation enumerates the indices of the closed windows holding it
+    (one, or ~duration/stride when sliding, one more on a window edge),
+    and the include flags run as the exact endpoint predicate after the
+    equi-join.  Results are wrong if a declared grid does not match the
+    windows: off-grid windows miss observations.
 
     ``approx_percentiles``: when set, ``median``/``pXX`` use Spark's
     ``percentile_approx`` sketch with this accuracy parameter (e.g. 10000;
@@ -226,7 +260,7 @@ def resample_eav(
     ``bucket_width`` are mutually exclusive.  A detected or declared
     regular grid wins over both (strictly cheaper).  On a
     DayTimeIntervalType time axis bucket ids are in seconds
-    (``util.bucket_numeric_double``), so pick ``bucket_width`` in seconds.
+    (``util.exact_numeric_double``), so pick ``bucket_width`` in seconds.
 
     **Skewed entities** (one patient/session owning a large share of the
     observations): measured at 10M observations with one entity holding
@@ -243,35 +277,17 @@ def resample_eav(
     aggregation; no built-in salting knob, by design (AQE's runtime split
     is the same mechanism without a manual fan-out to mis-tune).
     """
-    if join_strategy not in ("auto", "direct", "sweep"):
-        raise ValueError(f"join_strategy must be auto/direct/sweep, got {join_strategy!r}")
-    if join_strategy == "sweep" and bucket_width is not None:
-        raise ValueError("join_strategy='sweep' and bucket_width are mutually exclusive")
     if callable(windows) and not isinstance(windows, DataFrame):
         windows = windows(df, entity_col=entity_col, time_col=time_col)
     ensure_columns(df, [entity_col, time_col, attribute_col, value_col])
-
-    ws = window_start_col or f"{time_col}_start"
-    wp = window_stop_col or f"{time_col}_stop"
-    has_start = ws in windows.columns
-    has_stop = wp in windows.columns
-    if not has_start and not has_stop:
-        raise ValueError(f"windows needs at least one of {ws!r}, {wp!r}")
-    ensure_columns(windows, [entity_col])
+    win, wjoin, key_cols = _window_keys(
+        windows, entity_col, window_start_col or f"{time_col}_start",
+        window_stop_col or f"{time_col}_stop", assume_unique_windows,
+        bucket_width, join_strategy)
 
     # --- normalize agg spec -------------------------------------------
     spec: dict[str, list] = {a: as_list(fns) for a, fns in agg.items()}
     attrs = list(spec)
-
-    # content key: windows are identified by (entity, start, stop), not by a
-    # generated id (see module docstring "Determinism")
-    key_cols = [_KE] + ([_KS] if has_start else []) + ([_KP] if has_stop else [])
-    key_map = {_KE: F.col(entity_col)}
-    if has_start:
-        key_map[_KS] = F.col(ws)
-    if has_stop:
-        key_map[_KP] = F.col(wp)
-    win = windows.withColumns(key_map)
 
     # bool/int values promote to a float type for aggregation (reference
     # _get_default_value, resampling.py:1558-1570: bool -> float32,
@@ -293,56 +309,51 @@ def resample_eav(
     )
 
     # --- the join: entity + time-in-window ----------------------------
-    # distinct() so duplicate windows do not double-count observations; the
-    # aggregate row is fanned back out by the final join on the content key
-    wjoin = win.select(*key_cols)
-    if not assume_unique_windows:
-        wjoin = wjoin.distinct()
-
     grid = None
-    stride = None
     obs_long = _grid_long(F.col(time_col), df.schema[time_col].dataType)
+    wsch = {f.name: f.dataType for f in wjoin.schema.fields}
     if isinstance(regular, tuple):
-        if not (has_start and has_stop):
+        if len(key_cols) < 3:
             raise ValueError("regular=(origin, duration) needs both window endpoints")
         if obs_long is None:
             raise ValueError(
                 f"regular=(origin, duration) needs an integral, time-like, "
                 f"or day-time-interval {time_col!r}, "
                 f"got {df.schema[time_col].dataType.simpleString()}")
-        grid = (int(regular[0]), int(regular[1]))
-        stride = int(regular[2]) if len(regular) > 2 else int(regular[1])
-        if stride <= 0 or stride > grid[1]:
+        grid = (int(regular[0]), int(regular[1]),
+                int(regular[2]) if len(regular) > 2 else int(regular[1]))
+        if grid[2] <= 0 or grid[2] > grid[1]:
             raise ValueError("stride must be in (0, duration]")
-    elif regular in ("auto", True) and has_start and has_stop:
-        wsch = {f.name: f.dataType for f in wjoin.schema.fields}
+    elif regular in ("auto", True) and len(key_cols) == 3:
         fam = _grid_family(df.schema[time_col].dataType)
         same_scale = (fam is not None
                       and _grid_family(wsch[_KS]) == fam
                       and _grid_family(wsch[_KP]) == fam)
         if obs_long is not None and same_scale:
-            grid = _detect_regular_grid(wjoin)
-            if grid is not None:
-                stride = grid[1]
+            found = _detect_regular_grid(wjoin)
+            if found is not None:
+                grid = (*found, found[1])  # tumbling: stride == duration
 
-    if grid is not None and stride != grid[1]:
-        # sliding windows: enumerate the <= duration/stride + 1 candidate
-        # window indices per observation by floor-division, equi-join on
-        # (entity, index), then apply the EXACT endpoint predicate as a
-        # residual filter (the enumeration over-includes by at most one
-        # window at each end, so no per-flag case analysis is needed)
-        origin, dur = grid
+    if grid is not None:
+        # one regular-grid leg (tumbling is stride == duration): window k
+        # covers [origin + k*stride, origin + k*stride + duration], so the
+        # closed windows holding an observation at offset x are indices
+        # ceil((x - duration) / stride) .. floor(x / stride) -- a single
+        # index unless x sits on a window edge.  Equi-join on (entity,
+        # index), then the include flags run as the exact residual filter.
+        origin, dur, stride = grid
         IDX = "__w_idx__"
-        wsch2 = {f.name: f.dataType for f in wjoin.schema.fields}
 
         def fdiv(x, b):
+            # floor(x / b): x - pmod(x, b) is an exact multiple of b, so
+            # the double division is an exact integer (|x| < 2^53)
             return ((x - F.pmod(x, F.lit(b))) / F.lit(b)).cast("long")
 
         wfast = wjoin.withColumn(
-            IDX, fdiv(_grid_long(F.col(_KS), wsch2[_KS]) - F.lit(origin), stride))
+            IDX, fdiv(_grid_long(F.col(_KS), wsch[_KS]) - F.lit(origin), stride))
         x = obs_long - F.lit(origin)
-        idx = F.explode(F.sequence(fdiv(x - F.lit(dur), stride), fdiv(x, stride)))
-        ofast = obs.withColumn(IDX, idx)
+        ofast = obs.withColumn(IDX, F.explode(F.sequence(
+            -fdiv(F.lit(dur) - x, stride), fdiv(x, stride))))
         joined = ofast.join(
             wfast, on=[ofast[entity_col] == wfast[_KE],
                        ofast[IDX] == wfast[IDX]],
@@ -352,50 +363,14 @@ def resample_eav(
         resid = resid & ((F.col(time_col) <= F.col(_KP)) if include_stop
                          else (F.col(time_col) < F.col(_KP)))
         pairs = joined.filter(resid)
-    elif grid is not None:
-        # regular-window fast path: window index by exact long arithmetic,
-        # theta join -> equi join on (entity, index).  Boundary handling
-        # reproduces the four include_start/include_stop combinations; only
-        # the doubly-inclusive case can put one observation into two
-        # adjacent windows (array + explode, 1 element in the common case).
-        origin, dur = grid
-        IDX = "__w_idx__"
-        wsch2 = {f.name: f.dataType for f in wjoin.schema.fields}
-        w_idx = ((_grid_long(F.col(_KS), wsch2[_KS]) - F.lit(origin))
-                 / F.lit(dur)).cast("long")
-        wfast = wjoin.withColumn(IDX, w_idx)
-        x = obs_long - F.lit(origin)
-        r = F.pmod(x, F.lit(dur))
-        # x - r is an exact multiple of dur, so the double division below is
-        # an exact integer (|epoch micros| < 2^53) and the cast is lossless
-        base = ((x - r) / F.lit(dur)).cast("long")
-        on_edge = r == 0
-        if include_start and not include_stop:
-            idx = base
-        elif include_stop and not include_start:
-            idx = F.when(on_edge, base - 1).otherwise(base)
-        elif include_start and include_stop:
-            idx = F.explode(F.when(on_edge, F.array(base - 1, base))
-                            .otherwise(F.array(base)))
-        else:
-            idx = F.when(~on_edge, base)  # boundary obs match no window
-        ofast = obs.withColumn(IDX, idx)
-        if not (include_start or include_stop):
-            ofast = ofast.filter(F.col(IDX).isNotNull())
-        pairs = ofast.join(
-            wfast, on=[ofast[entity_col] == wfast[_KE],
-                       ofast[IDX] == wfast[IDX]],
-            how="inner").drop(ofast[IDX]).drop(wfast[IDX])
     else:
         # irregular windows: merge_intervals' interval join, observations
         # as points on the left, windows (intervals) on the right
-        if bucket_width is not None and not (has_start and has_stop):
-            raise ValueError("bucket_width requires both window endpoints")
         pairs = merge_intervals(
             obs, wjoin, left_on=[entity_col], right_on=[_KE], how="inner",
             left_start=time_col, left_stop=time_col,
-            right_start=_KS if has_start else None,
-            right_stop=_KP if has_stop else None,
+            right_start=_KS if _KS in key_cols else None,
+            right_stop=_KP if _KP in key_cols else None,
             include_right_start=include_start, include_right_stop=include_stop,
             strategy="bucket" if bucket_width is not None else join_strategy,
             bucket_width=bucket_width)
@@ -495,22 +470,14 @@ def resample_eav(
     if std_exprs:
         out = out.join(pairs.groupBy(*key_cols).agg(*std_exprs), on=key_cols, how="left")
 
-    # --- mode / mode_count (reference misc.py:930-933 tie-break): count
-    # then a min_by reduction ordered (most frequent, smallest value) —
-    # both shuffles partial-aggregate map-side (same pattern as
-    # operators.grouped_mode, which replaced the row_number window there)
+    # --- mode / mode_count: operators.grouped_mode over the pairs (same
+    # tie-break, reference misc.py:930-933); windows without a non-null
+    # value get a null mode and, through the coalesce below, count 0
     for a, wanted in mode_reqs.items():
-        sub = pairs.filter((attr == F.lit(a)) & val.isNotNull())
-        counts = sub.groupBy(*key_cols, value_col).agg(F.count(F.lit(1)).alias("__cnt__"))
-        best = counts.groupBy(*key_cols).agg(F.min_by(
-            F.struct(F.col(value_col).alias("m"), F.col("__cnt__").alias("c")),
-            F.struct(-F.col("__cnt__"), F.col(value_col))).alias("__b__"))
-        sel = [F.col(c) for c in key_cols]
-        if "mode" in wanted:
-            sel.append(F.col("__b__.m").alias(f"{a}_mode"))
-        if "mode_count" in wanted:
-            sel.append(F.col("__b__.c").alias(f"{a}_mode_count"))
-        out = out.join(best.select(*sel), on=key_cols, how="left")
+        best = grouped_mode(pairs.filter(attr == F.lit(a)), key_cols, value_col,
+                            mode_name=f"{a}_mode", count_name=f"{a}_mode_count")
+        out = out.join(best.select(*key_cols, *[f"{a}_{w}" for w in wanted]),
+                       on=key_cols, how="left")
         if "mode_count" in wanted:
             out = out.withColumn(f"{a}_mode_count", F.coalesce(F.col(f"{a}_mode_count"), F.lit(0)))
 
@@ -766,25 +733,18 @@ def resample_interval(
     follows the observation start column; windows must use the same
     family (mixed end FIELDS are fine — both comparison coercion and the
     extraction normalize to DAY TO SECOND).  ``epsilon`` stays in
-    seconds, and so is ``bucket_width`` (bucket ids use the monotone
-    truncating view, the exact predicate the original columns).
+    seconds, and so is ``bucket_width`` (bucket ids use the same exact
+    seconds view, the exact predicate the original columns).
     """
-    if join_strategy not in ("auto", "direct", "sweep"):
-        raise ValueError(f"join_strategy must be auto/direct/sweep, got {join_strategy!r}")
-    if join_strategy == "sweep" and bucket_width is not None:
-        raise ValueError("join_strategy='sweep' and bucket_width are mutually exclusive")
     tc = time_col or start_col
     if callable(windows) and not isinstance(windows, DataFrame):
         windows = windows(df, entity_col=entity_col, time_col=tc,
                           start_col=start_col, stop_col=stop_col)
     ensure_columns(df, [entity_col, start_col, stop_col, attribute_col, value_col])
-
-    ws = window_start_col or f"{tc}_start"
-    wp = window_stop_col or f"{tc}_stop"
-    has_start = ws in windows.columns
-    has_stop = wp in windows.columns
-    if not has_start and not has_stop:
-        raise ValueError(f"windows needs at least one of {ws!r}, {wp!r}")
+    win, wjoin, key_cols = _window_keys(
+        windows, entity_col, window_start_col or f"{tc}_start",
+        window_stop_col or f"{tc}_stop", assume_unique_windows,
+        bucket_width, join_strategy)
 
     if attributes is None:
         # discovery requires materializing the distinct attribute values on
@@ -804,57 +764,35 @@ def resample_interval(
         attributes = sorted((r[0] for r in rows if r[0] is not None), key=str)
     attributes = list(attributes)
 
-    # content key instead of a generated window id (module docstring
-    # "Determinism"): duplicate windows receive the same aggregate row
-    key_cols = [_KE] + ([_KS] if has_start else []) + ([_KP] if has_stop else [])
-    key_map = {_KE: F.col(entity_col)}
-    if has_start:
-        key_map[_KS] = F.col(ws)
-    if has_stop:
-        key_map[_KP] = F.col(wp)
-    win = windows.withColumns(key_map)
-
-    sch = {f.name: f.dataType for f in df.schema.fields}
-    timey = _is_time_like(sch[start_col])
-    intervally = isinstance(sch[start_col], T.DayTimeIntervalType)
+    # the factor is a RATIO of durations, so the coercion must be exact:
+    # day-time intervals (elapsed-time axes) take the field-extraction sum,
+    # and the coercion family follows the observation start column
+    # (mismatched obs/window families fail loudly in the join's type
+    # coercion)
+    start_type = df.schema[start_col].dataType
 
     def num(c: Column) -> Column:
-        # the factor math is a RATIO of durations, so this coercion must be
-        # exact — a truncating cast would silently move sub-second overlap
-        # fractions.  Day-time intervals (elapsed-time axes) go through the
-        # exact field-extraction sum; the coercion family follows the
-        # observation start column's dtype, as with `timey` (mismatched
-        # obs/window families fail loudly in the join's type coercion).
-        if intervally:
-            from ..util import interval_total_seconds
-
-            return interval_total_seconds(c)
-        return c.cast("timestamp").cast("double") if timey else c.cast("double")
+        return exact_numeric_double(c, start_type)
 
     obs = (
         df.select(entity_col, start_col, stop_col, attribute_col, value_col)
         .filter(F.col(attribute_col).isin(attributes))
     )
 
-    wjoin = win.select(*key_cols)
-    if not assume_unique_windows:
-        wjoin = wjoin.distinct()
-    if bucket_width is not None and not (has_start and has_stop):
-        raise ValueError("bucket_width requires both window endpoints")
     # closed endpoints on both sides (reference resampling.py:478-480,
     # 493-495); merge_intervals drops empty intervals on either side
     pairs = merge_intervals(
         obs, wjoin, left_on=[entity_col], right_on=[_KE], how="inner",
         left_start=start_col, left_stop=stop_col,
-        right_start=_KS if has_start else None,
-        right_stop=_KP if has_stop else None,
+        right_start=_KS if _KS in key_cols else None,
+        right_stop=_KP if _KP in key_cols else None,
         strategy="bucket" if bucket_width is not None else join_strategy,
         bucket_width=bucket_width)
 
     a = num(F.col(start_col))
     b = num(F.col(stop_col))
-    s = num(F.col(_KS)) if has_start else F.lit(float("-inf"))
-    t_ = num(F.col(_KP)) if has_stop else F.lit(float("inf"))
+    s = num(F.col(_KS)) if _KS in key_cols else F.lit(float("-inf"))
+    t_ = num(F.col(_KP)) if _KP in key_cols else F.lit(float("inf"))
     inter_lo = F.greatest(a, s)
     inter_hi = F.least(b, t_)
     len_i = b - a

@@ -545,7 +545,9 @@ def connected_components(
     The jump halves label-chain depth each round, so convergence takes
     O(log d) rounds for diameter d — near-dup graphs are dense clusters with
     tiny diameters, so 1-3 advancing rounds in practice; ``max_iterations``
-    bounds the adversarial case.  Per round: one map-side-combinable
+    bounds the adversarial case: if a node can still improve after that
+    many advancing rounds, this raises ``RuntimeError`` instead of
+    returning unconverged labels.  Per round: one map-side-combinable
     min-aggregate on the edge list (checkpointed — it feeds both the
     convergence probe and the label update), a limit-1 stability probe,
     and — only when a node can still improve — two label-table
@@ -581,7 +583,7 @@ def connected_components(
               .groupBy("id").agg(F.min("cluster_id").alias("cluster_id"))
               .localCheckpoint(eager=True))
     from ..util import release_local_checkpoint
-    for _ in range(max_iterations):
+    for it in range(max_iterations + 1):
         # one-hop neighbor minimum, checkpointed once per round: both
         # the convergence probe and (when advancing) the label update
         # read it, so the edge-sized join+aggregate runs exactly once
@@ -606,6 +608,14 @@ def connected_components(
         if improving == 0:
             release_local_checkpoint(nbr)
             break
+        if it == max_iterations:
+            # the extra round only probes: unconverged labels would be a
+            # plausible wrong clustering, so they are never returned
+            for df in (nbr, labels, edges):
+                release_local_checkpoint(df)
+            raise RuntimeError(
+                f"connected_components did not converge in "
+                f"max_iterations={max_iterations} rounds")
         new = (labels.join(nbr, "id", "left")
                .select("id", F.least("cluster_id",
                                      F.coalesce("nbr_min", "cluster_id"))

@@ -129,46 +129,48 @@ def heavy_hitters(
     if capacity is not None and capacity <= 1.0 / min_share:
         raise ValueError("capacity must exceed 1/min_share for the "
                          "no-false-negative guarantee")
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     vals = ensure_min_partitions(df.select(F.col(col).alias("val")))
     out_schema = "val " + dict(vals.dtypes)["val"] + ", __np__ long"
+    nan = float("nan")  # one NaN key object: dict lookups match it by identity
 
     def candidates(batches):
         counts: dict = {}
         n = 0
-        val_dtype = None
-        for pdf in batches:
-            if val_dtype is None:
-                val_dtype = pdf["val"].dtype
-            n += len(pdf)
-            for v, c in pdf["val"].value_counts(dropna=True).items():
-                counts[v] = counts.get(v, 0) + int(c)
+        val_type = None
+        for batch in batches:
+            val_type = batch.schema.field("val").type
+            n += batch.num_rows
+            vc = pc.value_counts(batch.column("val"))
+            for v, c in zip(vc.field("values").to_pylist(),
+                            vc.field("counts").to_pylist()):
+                if v is None:
+                    continue
+                if v != v:
+                    v = nan
+                counts[v] = counts.get(v, 0) + c
             if capacity is not None and len(counts) > capacity:
                 # Misra-Gries decrement: drop the smallest counters so at
                 # most `capacity` survive; every surviving count is an
                 # undercount by at most the cut value (sum of cuts <= n/cap)
                 cut = sorted(counts.values())[len(counts) - capacity]
                 counts = {v: c - cut for v, c in counts.items() if c > cut}
+        if val_type is None:
+            return  # empty partition: no candidates, and it counts 0 rows
         thresh = (min_share - (1.0 / capacity if capacity else 0.0)) * n
         keep = [v for v, c in counts.items() if c >= thresh]
-        # candidates and the marker are SEPARATE frames so the candidate
-        # column keeps its native dtype: one mixed frame with the None
-        # marker coerces int64 -> float64 (pandas cannot hold None in
-        # int64), silently corrupting values above 2^53 before Arrow
-        # casts back to long — for 64-bit hash/id columns the corrupted
-        # candidate then misses the pass-2 semi-join and a true heavy
-        # hitter is dropped
-        if keep:
-            yield pd.DataFrame(
-                {"val": pd.Series(keep, dtype=val_dtype),
-                 "__np__": pd.array([None] * len(keep), dtype="Int64")})
-        # marker row (val NULL — value_counts(dropna) never emits a null
-        # candidate, so NULL unambiguously tags the partition count)
-        yield pd.DataFrame({"val": pd.Series([None], dtype="object"),
-                            "__np__": pd.array([n], dtype="Int64")})
+        # Arrow batches keep the value column's native type next to nulls
+        # (a pandas frame turns a nullable long column into float64 and
+        # corrupts values above 2^53).  The marker row's NULL value tags
+        # the partition count: a null is never a candidate.
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(keep + [None], type=val_type),
+             pa.array([None] * len(keep) + [n], type=pa.int64())],
+            names=["val", "__np__"])
 
-    cand_all = (vals.mapInPandas(candidates, out_schema)
+    cand_all = (vals.mapInArrow(candidates, out_schema)
                 .localCheckpoint(eager=True))
     cand = (cand_all.filter(F.col("val").isNotNull())
             .select("val").distinct())

@@ -1,8 +1,5 @@
 """Shared conventions for the engine (SURVEY.md §7 "Conventions first").
 
-- Row identity/order: the reference relies on the implicit pandas row index
-  (reference merging.py:113-115); Spark has no row order, so operators that
-  need identity generate an explicit ``__row_id__`` long column.
 - Intervals are two ordinary columns; a missing endpoint column means that
   endpoint is +/- infinity (reference resampling.py:58-59, merging.py:67-78).
 - Null endpoints mean "empty interval" and such rows never match
@@ -18,8 +15,6 @@ from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-ROW_ID = "__row_id__"
-
 _log = logging.getLogger(__name__)
 
 
@@ -27,46 +22,14 @@ def numeric_double(c: Column, dt) -> Column:
     """Double view of an orderable column for range-bucket / tolerance /
     distance arithmetic: timestamp-like types become epoch seconds, numerics
     cast directly.  THE single definition of time-to-double coercion — the
-    asof, merging, and resampling operators all share it.  (Lossy
-    monotone-only coercions — e.g. DayTimeIntervalType, whose cast
-    truncates sub-second parts — are deliberately NOT here: tolerance and
-    grid arithmetic needs exact values.  Bucket arithmetic, which only
-    needs monotonicity, uses ``bucket_numeric_double`` below.)"""
+    asof, merging, events and resampling operators all share it, through
+    ``exact_numeric_double`` where a day-time-interval axis is admitted
+    (whose bigint cast truncates sub-second parts)."""
     from pyspark.sql import types as T
 
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
         return c.cast("timestamp").cast("double")
     return c.cast("double")
-
-
-def bucket_numeric_double(c: Column, dt) -> Column:
-    """Monotone double view for BUCKET arithmetic only.  Extends
-    ``numeric_double`` with DayTimeIntervalType: the column is first
-    normalized to the canonical ``INTERVAL DAY TO SECOND`` field range,
-    then CAST(.. AS BIGINT) yields total seconds (sub-second part
-    truncated).  The normalization is essential: Spark's interval→bigint
-    cast reports totals in the interval's END FIELD unit (``INTERVAL '3'
-    DAY`` casts to 3, not 259200), so without it two join sides whose
-    endpoint columns carry different end fields would compute bucket ids
-    in different units and silently drop matching pairs.  Truncation to
-    whole seconds is monotone non-decreasing, which is the only property
-    bucket explode/anchor arithmetic needs (each interval's bucket span
-    stays a superset of the true span, and the anchor bucket — computed
-    from the same coercion on both sides — stays inside both spans); the
-    exact comparisons always run on the ORIGINAL columns as the residual
-    predicate.  Deliberately separate from ``numeric_double``:
-    tolerance/grid arithmetic (asof, regular-grid resample) needs exact
-    values, and a truncating coercion there would silently move
-    sub-second matches.  Used by ``merge_intervals(strategy="bucket")``,
-    which the ``bucket_width`` option of ``resample_eav`` /
-    ``resample_interval`` selects."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.DayTimeIntervalType):
-        canon = T.DayTimeIntervalType(
-            T.DayTimeIntervalType.DAY, T.DayTimeIntervalType.SECOND)
-        return c.cast(canon).cast("bigint").cast("double")
-    return numeric_double(c, dt)
 
 
 def plan_stats(df) -> tuple:
@@ -139,12 +102,12 @@ def release_local_checkpoint(df) -> None:
 def exact_numeric_double(c: Column, dt) -> Column:
     """``numeric_double`` extended with DayTimeIntervalType via EXACT
     field extraction (``interval_total_seconds`` — decimal sum, full
-    microsecond fraction): the coercion for TOLERANCE / DISTANCE
-    arithmetic on any orderable axis the engine's dtype contract admits
-    (reference ``catabra_pandas/resampling.py:45-47`` — "anything
-    comparable").  Deliberately separate from ``bucket_numeric_double``,
-    whose truncation is fine for bucket ids but would silently move
-    sub-second as-of matches."""
+    microsecond fraction): the coercion for TOLERANCE / DISTANCE / RATIO
+    and BUCKET arithmetic on any orderable axis the engine's dtype
+    contract admits (reference ``catabra_pandas/resampling.py:45-47`` —
+    "anything comparable").  Exact values are also monotone, which is all
+    bucket ids need; the truncating interval→bigint cast would silently
+    move sub-second as-of matches and overlap fractions."""
     from pyspark.sql import types as T
 
     if isinstance(dt, T.DayTimeIntervalType):
@@ -152,20 +115,15 @@ def exact_numeric_double(c: Column, dt) -> Column:
     return numeric_double(c, dt)
 
 
-def interval_total_seconds(c: Column) -> Column:
-    """EXACT total seconds of a day-time interval column as a double.
-
-    ``CAST(interval AS BIGINT)`` truncates sub-second parts (and reports
-    totals in the END FIELD's unit — see ``bucket_numeric_double``), so it
-    cannot feed ratio/tolerance arithmetic.  This instead widens to the
-    canonical DAY TO SECOND field range and sums the extracted fields:
+def _interval_seconds_decimal(c: Column) -> Column:
+    """Exact total seconds of a day-time interval as a DECIMAL: widen to
+    the canonical DAY TO SECOND field range and sum the extracted fields.
     DAY/HOUR/MINUTE are integral, SECOND is a DECIMAL(8,6) carrying the
     full microsecond fraction, and all fields are sign-consistent for
     negative intervals (verified: INTERVAL '-1 02:03:04.500617' →
-    -93784.500617).  The decimal sum is exact; the final double is exact
-    to the microsecond for |interval| < 2^52 µs-quanta ≈ 142 years and
-    monotone (nearest-rounding) beyond — far past any elapsed-time axis,
-    and the same magnitude limit pandas' float64 timedelta views have."""
+    -93784.500617).  The canonical widening matters: ``CAST(interval AS
+    BIGINT)`` reports totals in the END FIELD's unit (``INTERVAL '3'
+    DAY`` casts to 3, not 259200) and truncates sub-second parts."""
     from pyspark.sql import types as T
 
     canon = c.cast(T.DayTimeIntervalType(
@@ -175,27 +133,27 @@ def interval_total_seconds(c: Column) -> Column:
         + F.extract(F.lit("HOUR"), canon) * 3600
         + F.extract(F.lit("MINUTE"), canon) * 60
         + F.extract(F.lit("SECOND"), canon)
-    ).cast("double")
+    )
+
+
+def interval_total_seconds(c: Column) -> Column:
+    """EXACT total seconds of a day-time interval column as a double: the
+    decimal sum of ``_interval_seconds_decimal`` cast once.  The double
+    is exact to the microsecond for |interval| < 2^52 µs-quanta ≈ 142
+    years and monotone (nearest-rounding) beyond — far past any
+    elapsed-time axis, and the same magnitude limit pandas' float64
+    timedelta views have."""
+    return _interval_seconds_decimal(c).cast("double")
 
 
 def interval_total_micros(c: Column) -> Column:
     """EXACT total microseconds of a day-time interval as a long — the
-    decimal field-extraction sum of ``interval_total_seconds`` scaled by
-    1e6 BEFORE the cast, so nothing is rounded: day-time intervals are
-    microsecond-quantized internally and the decimal intermediate carries
-    the full value.  This is the grid-arithmetic view (floor-div/modulo
-    equality must be exact), the interval analogue of ``unix_micros``."""
-    from pyspark.sql import types as T
-
-    canon = c.cast(T.DayTimeIntervalType(
-        T.DayTimeIntervalType.DAY, T.DayTimeIntervalType.SECOND))
-    secs = (
-        F.extract(F.lit("DAY"), canon).cast("decimal(18,0)") * 86400
-        + F.extract(F.lit("HOUR"), canon) * 3600
-        + F.extract(F.lit("MINUTE"), canon) * 60
-        + F.extract(F.lit("SECOND"), canon)
-    )
-    return (secs * F.lit(1_000_000)).cast("long")
+    decimal sum of ``_interval_seconds_decimal`` scaled by 1e6 BEFORE the
+    cast, so nothing is rounded: day-time intervals are
+    microsecond-quantized internally.  This is the grid-arithmetic view
+    (floor-div/modulo equality must be exact), the interval analogue of
+    ``unix_micros``."""
+    return (_interval_seconds_decimal(c) * F.lit(1_000_000)).cast("long")
 
 
 def ordered_dense_ids(df: DataFrame, cols: Sequence[str],
@@ -325,49 +283,6 @@ def ensure_columns(df: DataFrame, cols: Iterable[str], what: str = "column") -> 
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"missing {what}(s) {missing}; have {df.columns}")
-
-
-def qualify(df: DataFrame, cols: Sequence[str]) -> list[Column]:
-    return [df[c] for c in cols]
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with key salting for skewed keys.
-
-    AQE's skew-join handling splits oversized SORT-MERGE partitions, but it
-    cannot help when one logical key is so hot that a single key's rows
-    exceed an executor (AQE splits partitions, not keys).  Salting does:
-    the LEFT side gets a uniform random salt in [0, salt); the RIGHT side
-    is replicated ``salt`` times (explode of a literal sequence), so each
-    (key, salt) bucket carries ~1/salt of the hot key's rows and the join
-    parallelizes across ``salt`` tasks per key.
-
-    Use when the right side is small-ish per key (dimension-like) but too
-    large or too dynamic to broadcast, and the left carries hot keys.
-    ``how`` supports "inner" and "left" (the salt column is internal and
-    dropped; row multiplicity is unchanged because each left row carries
-    exactly one salt value and matches exactly one replica).
-
-    The salt uses a hash of the whole left row (not ``rand()``), so the
-    result is deterministic under task retries / plan re-evaluation.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    keys = as_list(on)
-    SALT = "__salt__"
-    lsalt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]),
-                   F.lit(salt)).cast("int")
-    l_ = left.withColumn(SALT, lsalt)
-    r_ = right.withColumn(
-        SALT, F.explode(F.sequence(F.lit(0).cast("int"), F.lit(salt - 1).cast("int"))))
-    out = l_.join(r_, on=keys + [SALT], how=how)
-    return out.drop(SALT)
 
 
 def ensure_min_partitions(df: DataFrame, factor: float = 1.0) -> DataFrame:

@@ -109,15 +109,14 @@ _BUCKET_WIDTHS = {
 def test_merge_intervals_bucket_dtype_matrix(spark, kind, width_class):
     """The bucket (large-large) strategy over the full endpoint dtype grid
     with ADVERSARIAL widths (VERDICT r9 #3/#4): date endpoints ride the
-    shared epoch coercion, day-time intervals the merging-local
-    CAST-to-seconds truncation (monotone only — the sub-second spans here
-    make truncated endpoints collide across bucket boundaries), strings
-    the order-preserving dictionary codes.  Must equal the plain pandas
+    shared epoch coercion, day-time intervals the exact field-extraction
+    seconds (the sub-second spans here straddle bucket boundaries),
+    strings the order-preserving dictionary codes.  Must equal the plain pandas
     oracle — i.e. the direct path — row-for-row."""
     left, right = _dtype_matrix_frames(kind)
     if kind == "timedelta":
-        # millisecond jitter so truncation to whole seconds is LOSSY and
-        # bucket assignment genuinely coarser than the exact predicate
+        # millisecond jitter so endpoints sit inside buckets and bucket
+        # assignment is genuinely coarser than the exact predicate
         rng = np.random.default_rng(99)
         left["start"] = left["start"] + pd.to_timedelta(
             rng.integers(0, 1000, len(left)), unit="ms")
@@ -145,9 +144,9 @@ def test_merge_intervals_bucket_mixed_interval_endfields(spark):
     interval's END FIELD unit (INTERVAL '3' DAY → 3, not 259200).  If the
     two sides of a bucket join carry day-time intervals with DIFFERENT
     end fields, an un-normalized cast computes bucket ids in different
-    units and silently drops matching pairs.  _bucket_numeric must
-    normalize both sides to the canonical DAY TO SECOND field range
-    first.  Left: whole-day intervals cast to INTERVAL DAY (end field
+    units and silently drops matching pairs.  The bucket coercion
+    (util.exact_numeric_double) must normalize both sides to the
+    canonical DAY TO SECOND field range first.  Left: whole-day intervals cast to INTERVAL DAY (end field
     DAY — lossless since values are whole days); right: second-granular
     INTERVAL DAY TO SECOND."""
     from pyspark.sql import functions as F, types as T
@@ -446,12 +445,12 @@ def test_resample_eav_interval_time_col_sweep_vs_direct(spark):
 
 def test_resample_eav_interval_time_col_bucket_vs_direct(spark):
     """DayTimeIntervalType time axis on the BUCKET escape leg (VERDICT r10
-    missing #2, closed r11): bucket ids come from the monotone
-    ``util.bucket_numeric_double`` coercion — canonical DAY TO SECOND
-    normalization, then truncation to whole seconds — so the bucket leg
-    must agree with direct cell-for-cell even with millisecond jitter in
-    the observations (truncation only WIDENS the candidate set; the exact
-    endpoint predicate on the original interval columns decides).
+    missing #2, closed r11): bucket ids come from the exact, monotone
+    ``util.exact_numeric_double`` coercion — canonical DAY TO SECOND
+    normalization, then the field-extraction seconds sum — so the bucket
+    leg must agree with direct cell-for-cell even with millisecond jitter
+    in the observations (the exact endpoint predicate on the original
+    interval columns decides).
     Sub-second observation times sitting exactly around window endpoints
     are the adversarial case: a non-monotone or unit-mismatched coercion
     would silently drop their windows' candidate pairs.

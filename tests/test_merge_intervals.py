@@ -868,3 +868,26 @@ def test_auto_detector_plan_time_short_circuit(spark, monkeypatch):
     la = spark.createDataFrame(mk(120_000).toPandas())
     ra = spark.createDataFrame(mk(60_000).toPandas())
     assert probe(la, ra, keyed=False) == (True, 2)
+
+
+def test_auto_detector_stats_failure_raises(spark):
+    """strategy="auto" on large keyed inputs runs the detector's stats
+    jobs while the join is built.  A stats job that fails must raise
+    there, not silently build the direct plan: the input is broken, and
+    a fallback pick would only defer (or hide) the failure."""
+    from pyspark.sql import functions as F
+
+    def mk(n):
+        # the key column fails when evaluated, so the detector's
+        # approx_count_distinct(keys) job fails; the plan itself is valid
+        return spark.range(n).select(
+            F.when(F.col("id") < 0, F.lit(1)).otherwise(
+                F.raise_error(F.lit("stats boom"))).cast("long").alias("g"),
+            F.col("id").cast("double").alias("start"),
+            (F.col("id") + 0.5).alias("stop"))
+
+    with pytest.raises(Exception, match="stats boom"):
+        merge_intervals(mk(200_000), mk(100_000), on="g", how="inner",
+                        left_start="start", left_stop="stop",
+                        right_start="start", right_stop="stop",
+                        strategy="auto")

@@ -62,32 +62,6 @@ def test_inner_or_cross(spark):
     assert inner_or_cross_join(l, r.drop("k"), on="k").count() == 6
 
 
-def test_salted_join_matches_plain_join(spark):
-    """salted_join must reproduce the plain equi-join exactly (inner and
-    left), including rows whose key is missing on the right, while spreading
-    one hot key over `salt` buckets."""
-    import pandas as pd
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from catabra_pandas_spark.util import salted_join
-
-    rng = np.random.default_rng(31)
-    left = pd.DataFrame({
-        # key 7 is hot: 70% of rows
-        "k": np.where(rng.random(500) < 0.7, 7, rng.integers(0, 10, 500)),
-        "v": np.arange(500),
-    })
-    right = pd.DataFrame({"k": np.arange(0, 8), "w": np.arange(0, 8) * 10})
-    ls, rs = spark.createDataFrame(left), spark.createDataFrame(right)
-    for how in ("inner", "left"):
-        plain = ls.join(rs, on="k", how=how).toPandas()
-        salted = salted_join(ls, rs, on="k", salt=8, how=how).toPandas()
-        plain = plain.sort_values(["k", "v"]).reset_index(drop=True)
-        salted = salted[plain.columns].sort_values(["k", "v"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(salted, plain, check_dtype=False)
-
-
 def test_grouped_topk(spark):
     import pandas as pd
     from catabra_pandas_spark import grouped_topk

@@ -703,6 +703,27 @@ def test_connected_components_long_chain_converges(spark):
     assert (out["cluster_id"] == 0).all()
 
 
+def test_connected_components_unconverged_raises(spark):
+    """Running out of max_iterations before the labels converge must
+    raise, never return a plausible wrong clustering: a 64-node path
+    graph needs several pointer-jumping rounds, so max_iterations=1
+    raises, while a graph that converges within the budget returns."""
+    import pandas as pd
+
+    from catabra_pandas_spark.pipeline import connected_components
+
+    n = 64
+    pairs = spark.createDataFrame(pd.DataFrame({
+        "id_a": list(range(n - 1)), "id_b": list(range(1, n))}))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, max_iterations=1)
+    # a star converges at the one-hop seed, well inside one round
+    star = spark.createDataFrame(pd.DataFrame({
+        "id_a": [0, 0, 0], "id_b": [1, 2, 3]}))
+    out = connected_components(star, max_iterations=1).toPandas()
+    assert sorted(out["cluster_id"]) == [0, 0, 0, 0]
+
+
 def test_decontaminate(spark):
     from catabra_pandas_spark.pipeline import decontaminate
 

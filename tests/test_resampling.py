@@ -185,9 +185,15 @@ def test_resample_eav_explicit_grid_tuple(spark):
                             regular=(0, 100)).toPandas()
     assert_pdf_equal(explicit, auto,
                      sort_by=["entity", "timestamp_start"])
+    # tumbling is the grid leg's stride == duration case: one plan
+    tumbling = resample_eav(sdf, swin, agg, tiebreak_col="obs_id",
+                            regular=(0, 100, 100))
+    assert resample_eav(sdf, swin, agg, tiebreak_col="obs_id",
+                        regular=(0, 100)).sameSemantics(tumbling)
 
 
-@pytest.mark.parametrize("incl", [(True, False), (True, True)])
+@pytest.mark.parametrize("incl", [(True, False), (True, True),
+                                  (False, True), (False, False)])
 def test_resample_eav_sliding_grid(spark, incl):
     """regular=(origin, duration, stride) with stride < duration (sliding
     windows): enumerated candidates + residual filter must equal the

@@ -210,11 +210,16 @@ def test_heavy_hitters_long_values_above_2_53(spark):
     """Candidate values must keep their native dtype through the pass-1
     mapper: a mixed candidates+marker frame coerces int64 -> float64 and
     silently corrupts values above 2^53, so true heavy hitters with
-    64-bit hash/id values would miss the pass-2 semi-join (ADVICE r13)."""
+    64-bit hash/id values would miss the pass-2 semi-join (ADVICE r13).
+    A null in the input column does the same to a pandas batch, so the
+    input also holds nulls; they count toward N but are never reported."""
     hot = 2**62 + 1          # not float64-representable
     hot2 = 2**62 + 3         # rounds to the SAME float64 as hot
-    vals = [hot] * 40 + [hot2] * 40 + list(range(20))
-    sdf = spark.createDataFrame([(int(v),) for v in vals], "val long")
+    vals = []
+    for i, v in enumerate([hot] * 40 + [hot2] * 40 + list(range(20))):
+        vals += [v, None] if i % 5 == 4 else [v]  # nulls in every batch
+    sdf = spark.createDataFrame(
+        [(None if v is None else int(v),) for v in vals], "val long")
     out = heavy_hitters(sdf, "val", min_share=0.2).toPandas()
     got = {int(v): int(c) for v, c in zip(out.val, out.cnt)}
     assert got == {hot: 40, hot2: 40}
