@@ -17,7 +17,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from ..util import as_list, ensure_columns
+from ..util import as_list, ensure_columns, order_view
 
 GROUP_ID = "interval_group"
 _CHUNK = "__chunk__"
@@ -86,6 +86,28 @@ def _range_chunks(df: DataFrame, num: Column, n_chunks: int):
 def _chunk_lit_array(values, n: int) -> Column:
     """P-element literal array indexed by ``element_at(arr, chunk + 1)``."""
     return F.array(*[F.lit(values.get(i)) for i in range(n)])
+
+
+def _keyless_cuts(df: DataFrame, c: Column, dt) -> list:
+    """Chunk cut points of a keyless window over the axis ``c`` of type
+    ``dt``: approximate quantiles of its order-preserving double view
+    (``util.order_view``; one job), or ``[]`` -- one chunk, no job -- when
+    the type has no such view (strings and other orderables).  Cutting on
+    the view, not on a plain double cast, keeps chunk order equal to the
+    axis' own order for every type."""
+    view = order_view(c, dt)
+    return [] if view is None else _quantile_cuts(df, view, _default_chunks(df))
+
+
+def _chunk_of(c: Column, dt, cuts: list) -> Column:
+    """Chunk id (0..len(cuts)) of the axis ``c`` of type ``dt`` under cuts
+    from ``_keyless_cuts``; 0 when there is one chunk."""
+    return _chunk_from_cuts(order_view(c, dt), cuts) if cuts else F.lit(0)
+
+
+def _chunk_lit(values, n: int) -> Column:
+    """The current row's entry of a per-chunk literal (carry or offset)."""
+    return F.element_at(_chunk_lit_array(values, n), F.col(_CHUNK) + 1)
 
 
 def group_intervals(
@@ -231,7 +253,12 @@ def combine_intervals(
     (no ``group_by``) sweep is DISTRIBUTED too: events are range-chunked,
     each chunk sweeps locally, and only O(P) scalar carries (per-chunk
     event-count prefix sums and boundary coverage) cross chunks — see
-    ``_coverage_bands``' keyless branch below.
+    ``_coverage_bands``.  Keyless chunk rule: chunks are cut at
+    approximate quantiles of the endpoints' order-preserving double view
+    (``util.order_view``: numeric, date/timestamp and day-time-interval
+    types; three small jobs); any other type (strings) runs as one chunk
+    with no job, so every type combines in its own order, exactly as
+    with a constant ``group_by``.
     """
     group_by = as_list(group_by)
     attr_cols = as_list(attr_cols)
@@ -267,6 +294,17 @@ def _coverage_bands(
     n_min: int,
     n_max: Optional[int],
 ) -> DataFrame:
+    """Maximal ``[n_min, n_max]``-coverage intervals of ``ivl`` per
+    ``group_by`` partition.  One window path: the windows partition by the
+    group keys, or, keyless, by a range chunk of the event time (see
+    ``_keyless_cuts``).  With more than one chunk, three cross-chunk
+    dependencies are carried by O(P)-scalar summaries: (1) running
+    coverage -> exclusive prefix sum of chunk deltas, (2) the segment
+    spanning a chunk boundary -> the next non-empty chunk's first event
+    time as the lead() fallback, (3) island continuation -> the previous
+    chunk's final coverage decides the boundary prev-in-band value, and
+    per-chunk island counts shift the island ids (a continuing run then
+    reproduces the previous chunk's island id exactly)."""
     group_by = list(group_by)
     starts = ivl.select(*group_by, F.col(start_col).alias("__t__"),
                         F.lit(1).alias("__delta__"), F.lit(0).alias("__tag__"))
@@ -278,62 +316,41 @@ def _coverage_bands(
         b = c >= n_min
         return b and c <= n_max if n_max is not None else b
 
-    if group_by:
-        w = Window.partitionBy(*group_by).orderBy(
-            F.col("__t__").asc(), F.col("__tag__").asc())
-        cov = F.sum("__delta__").over(w.rowsBetween(Window.unboundedPreceding, 0))
-        seg_stop = F.lead("__t__", 1).over(w)
-        prev_default = F.lit(False)
-        island_off = F.lit(0).cast("long")
-    else:
-        # keyless: distributed chunked sweep.  Range-chunk by event time,
-        # run the coverage/island windows per chunk in parallel, and carry
-        # the three cross-chunk dependencies via O(P)-scalar summaries:
-        # (1) running coverage -> exclusive prefix sum of chunk deltas,
-        # (2) the segment spanning a chunk boundary -> next non-empty
-        #     chunk's first event time as the lead() fallback,
-        # (3) island continuation -> the previous chunk's final coverage
-        #     decides the boundary prev-in-band value, and per-chunk island
-        #     counts shift the island ids (a continuing run then reproduces
-        #     the previous chunk's island id exactly).
-        chunked, P = _range_chunks(events, F.col("__t__"), _default_chunks(events))
-        w = Window.partitionBy(_CHUNK).orderBy(
-            F.col("__t__").asc(), F.col("__tag__").asc())
-        if P == 1:
-            events = chunked
-            cov = F.sum("__delta__").over(w.rowsBetween(Window.unboundedPreceding, 0))
-            seg_stop = F.lead("__t__", 1).over(w)
-            prev_default = F.lit(False)
-            island_off = F.lit(0).cast("long")
-        else:
-            summ = chunked.groupBy(_CHUNK).agg(
-                F.sum("__delta__").alias("s"), F.min("__t__").alias("t0")).collect()
-            sums = {r[_CHUNK]: int(r["s"]) for r in summ}
-            firsts = {r[_CHUNK]: r["t0"] for r in summ}
-            prefix, acc = {}, 0
-            for i in range(P):
-                prefix[i] = acc
-                acc += sums.get(i, 0)
-            nxt, nt = {}, None
-            for i in reversed(range(P)):
-                nxt[i] = nt
-                if i in firsts:
-                    nt = firsts[i]
-            first_ne = min(firsts) if firsts else 0
-            # boundary prev-in: the nearest previous positive segment is the
-            # previous non-empty chunk's last event, whose coverage is this
-            # chunk's prefix sum (chunks in between are empty)
-            prevb = {i: (i > first_ne and band(prefix[i])) for i in range(P)}
-
-            events = chunked
-            cov = (F.element_at(_chunk_lit_array(prefix, P), F.col(_CHUNK) + 1)
-                   + F.sum("__delta__").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-            seg_stop = F.coalesce(
-                F.lead("__t__", 1).over(w),
-                F.element_at(_chunk_lit_array(nxt, P), F.col(_CHUNK) + 1))
-            prev_default = F.element_at(
-                _chunk_lit_array(prevb, P), F.col(_CHUNK) + 1)
-            island_off = None  # filled below, needs the flag counts
+    P = 1
+    part = group_by
+    if not group_by:
+        t, tt = F.col("__t__"), events.schema["__t__"].dataType
+        cuts = _keyless_cuts(events, t, tt)
+        P = len(cuts) + 1
+        events = events.withColumn(_CHUNK, _chunk_of(t, tt, cuts))
+        part = [_CHUNK]
+    w = Window.partitionBy(*part).orderBy(
+        F.col("__t__").asc(), F.col("__tag__").asc())
+    cov = F.sum("__delta__").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    seg_stop = F.lead("__t__", 1).over(w)
+    prev_default = F.lit(False)
+    if P > 1:
+        summ = events.groupBy(_CHUNK).agg(
+            F.sum("__delta__").alias("s"), F.min("__t__").alias("t0")).collect()
+        sums = {r[_CHUNK]: int(r["s"]) for r in summ}
+        firsts = {r[_CHUNK]: r["t0"] for r in summ}
+        prefix, acc = {}, 0
+        for i in range(P):
+            prefix[i] = acc
+            acc += sums.get(i, 0)
+        nxt, nt = {}, None
+        for i in reversed(range(P)):
+            nxt[i] = nt
+            if i in firsts:
+                nt = firsts[i]
+        first_ne = min(firsts) if firsts else 0
+        # boundary prev-in: the nearest previous positive segment is the
+        # previous non-empty chunk's last event, whose coverage is this
+        # chunk's prefix sum (chunks in between are empty)
+        prevb = {i: (i > first_ne and band(prefix[i])) for i in range(P)}
+        cov = _chunk_lit(prefix, P) + cov
+        seg_stop = F.coalesce(seg_stop, _chunk_lit(nxt, P))
+        prev_default = _chunk_lit(prevb, P)
 
     # zero-length segments are ignored entirely: never emitted and never
     # splitting an in-band run (reference behavior, e.g. an isolated point
@@ -349,7 +366,8 @@ def _coverage_bands(
     # coalesce adjacent in-band segments into maximal intervals
     prev_in = F.coalesce(F.lag("__in__", 1).over(w), prev_default)
     flag = (F.col("__in__") & ~prev_in).cast("long")
-    if island_off is None:
+    island_off = F.lit(0).cast("long")
+    if P > 1:
         seg = seg.withColumn("__flag__", flag)
         cnts = {r[_CHUNK]: int(r["n"] or 0) for r in
                 seg.groupBy(_CHUNK).agg(F.sum("__flag__").alias("n")).collect()}
@@ -357,14 +375,11 @@ def _coverage_bands(
         for i in range(P):
             offs[i] = acc
             acc += cnts.get(i, 0)
-        island_off = F.element_at(_chunk_lit_array(offs, P), F.col(_CHUNK) + 1)
+        island_off = _chunk_lit(offs, P)
         flag = F.col("__flag__")
     island = island_off + F.sum(flag).over(
         w.rowsBetween(Window.unboundedPreceding, 0))
     seg = seg.withColumn("__island__", island).filter(F.col("__in__"))
-    out = seg.groupBy(*group_by, "__island__").agg(
+    return seg.groupBy(*group_by, "__island__").agg(
         F.min("__t__").alias(start_col), F.max("__seg_stop__").alias(stop_col)
     ).drop("__island__")
-    if not group_by:
-        out = out.drop(_CHUNK) if _CHUNK in out.columns else out
-    return out

@@ -170,6 +170,18 @@ def _auto_few_large_groups(left: DataFrame, right: DataFrame,
     return decision
 
 
+def _sweep_accepts(left_start, left_stop, right_start, right_stop) -> bool:
+    """The shapes the sweep strategy joins: a start column on at least one
+    side (with both starts -inf every stop-bounded pair overlaps through
+    the common -inf, an equi-join), and no side whose endpoints are both
+    None (a side unbounded both ways overlaps everything).  One rule for
+    ``strategy="sweep"``'s validation and ``strategy="auto"``'s detector
+    gate, so auto considers exactly the shapes the sweep accepts."""
+    return ((left_start is not None or right_start is not None)
+            and (left_start is not None or left_stop is not None)
+            and (right_start is not None or right_stop is not None))
+
+
 def _stamp_content_id(df: DataFrame, name: str) -> DataFrame:
     """Deterministic unique-per-row id: a struct of a 128-bit content hash
     and a duplicate rank.
@@ -244,9 +256,9 @@ def merge_intervals(
       estimated per-group residual ``n*m/G`` exceeds ``1024*(n+m)`` — the
       regime where direct is a measured 15x slower
       (scripts/bench_baseline.py t4, scripts/scale_smoke.py autostrat
-      tier); otherwise direct.  KEYLESS joins with four finite endpoints
-      and no ``bucket_width`` run the same detector with G=1 against the
-      higher keyless bound (16384: the direct plan is a broadcast
+      tier); otherwise direct.  KEYLESS joins without ``bucket_width``
+      run the same detector with G=1 against the higher keyless bound
+      (16384: the direct plan is a broadcast
       nested-loop whose comparisons are ~3x cheaper than SMJ residuals
       but whose cost grows as n*m without a key to divide it; measured
       16x slower than the sweep at 1M x 100k, while small keyless inputs
@@ -259,6 +271,17 @@ def merge_intervals(
       The right choice when key groups are large enough that the direct
       join's per-group n·m residual dominates (the few-large-groups
       regime; see scripts/bench_baseline.py t4).
+
+      The sweep's acceptance rule (``_sweep_accepts``) is one predicate
+      for both "sweep" and "auto": a start column on at least one side,
+      and no side with both endpoints None.  "sweep" raises ValueError on
+      any other shape; "auto" runs its detector on exactly these shapes
+      (half-infinite ones included) and joins every other shape direct.
+      A degenerate side with an open include flag needs no rule of its
+      own: the validity filter empties it on every strategy.  Keyless
+      sweeps range-chunk their windows on the endpoint axis' order view
+      (``util.order_view``: numeric, date/timestamp and day-time-interval
+      types); any other type (strings) runs as one chunk.
     * ``keep_order``/``copy`` of the reference are meaningless on Spark
       (no row order, immutable frames) and intentionally absent.
 
@@ -306,45 +329,27 @@ def merge_intervals(
     has_eq = len(left_on) > 0
     use_bucket = strategy == "bucket" or (
         strategy == "auto" and not has_eq and bucket_width is not None)
-    use_sweep = strategy == "sweep"
-    if (strategy == "auto" and not use_bucket
-            # keyed: few-large-groups detector; keyless (bucket_width
-            # None, else use_bucket caught it): BNLJ-rescue detector
-            # sweep preconditions, checked here so auto never raises:
-            # four finite endpoints; a degenerate (point) side needs
-            # inclusive flags
-            and left_start is not None and left_stop is not None
-            and right_start is not None and right_stop is not None
-            and (left_start != left_stop
-                 or (include_left_start and include_left_stop))
-            and (right_start != right_stop
-                 or (include_right_start and include_right_stop))):
-        use_sweep = _auto_few_large_groups(left, right, left_on, right_on)
+    # one acceptance rule for strategy="sweep" and auto's detector gate
+    sweep_ok = _sweep_accepts(left_start, left_stop, right_start, right_stop)
+    if strategy == "sweep" and not sweep_ok:
+        raise ValueError('strategy="sweep" needs a start column on at least '
+                         "one side and an endpoint column on each side (a "
+                         "side unbounded both ways, or -inf starts on both "
+                         "sides, reduce to an equi-join; use direct)")
+    use_sweep = strategy == "sweep" or (
+        strategy == "auto" and not use_bucket and sweep_ok
+        and _auto_few_large_groups(left, right, left_on, right_on))
     if use_sweep:
-        # the sort-sweep kernel (operators/sweep.py): output-sensitive
-        # point-in-interval join, requires one degenerate (point) side and
-        # produces the inner match set
-        if left_start is None and right_start is None:
-            raise ValueError('strategy="sweep" needs a start column on at '
-                             "least one side (both -inf degenerates to an "
-                             "equi-join; use direct)")
-        if (left_start is None and left_stop is None) or \
-                (right_start is None and right_stop is None):
-            raise ValueError('strategy="sweep" requires at least one finite '
-                             "endpoint per side (a fully unbounded side is "
-                             "an equi-join; use direct)")
+        # the sort-sweep kernel (operators/sweep.py) joins points into
+        # intervals: one sweep when a side is degenerate (its start column
+        # is its stop column; with an open flag the validity filter leaves
+        # it empty, as on the direct join), else a general overlap join of
+        # two disjoint point-in-interval sweeps (see the join below)
         if left_start == left_stop and left_start is not None:
             points_side = "left"
-            if not (include_left_start and include_left_stop):
-                raise ValueError("sweep: point-side include flags must be True")
         elif right_start == right_stop and right_start is not None:
             points_side = "right"
-            if not (include_right_start and include_right_stop):
-                raise ValueError("sweep: point-side include flags must be True")
         else:
-            # general overlap: decompose into two disjoint point-in-interval
-            # sweeps (see the use_sweep join branch below); a side with a
-            # -inf start contributes no sweep of its own start points
             points_side = None
     # full outer without equi-keys cannot run as a native BNLJ full join;
     # the bucket/sweep strategies are inner-only: all fall back to
@@ -429,6 +434,9 @@ def merge_intervals(
     # --- suffix overlapping columns ------------------------------------
     overlap = (set(left.columns) & set(right.columns)) - {LEFT_ID, RIGHT_ID}
     if drop_right_keys:
+        # on= keys keep their name on both sides, so the right-only rows
+        # unioned in below (unmatched, reduced away, invalid) already carry
+        # the one output key column
         overlap -= set(left_on)
     lsuf, rsuf = suffixes
     lren = {c: c + lsuf for c in overlap if lsuf}
@@ -578,10 +586,6 @@ def merge_intervals(
             matched = matched.unionByName(unmatched_l, allowMissingColumns=True)
         if how in ("right", "outer"):
             unmatched_r = rm_r.join(matched.select(RIGHT_ID), on=RIGHT_ID, how="left_anti")
-            if drop_right_keys:
-                for a, b in zip(left_on, right_on):
-                    unmatched_r = unmatched_r.withColumn(l_name(a), F.col(r_name(b)))
-                    unmatched_r = unmatched_r.drop(r_name(b)) if r_name(b) != l_name(a) else unmatched_r
             matched = matched.unionByName(unmatched_r, allowMissingColumns=True)
 
     # --- keep reduction (reference merging.py:728-748) ------------------
@@ -649,11 +653,6 @@ def merge_intervals(
         if how == "outer":
             kept_r = matched.select(RIGHT_ID).filter(F.col(RIGHT_ID).isNotNull())
             dropped_r = rm_r.join(kept_r, on=RIGHT_ID, how="left_anti")
-            if drop_right_keys:
-                for a, b in zip(left_on, right_on):
-                    dropped_r = dropped_r.withColumn(l_name(a), F.col(r_name(b)))
-                    if r_name(b) != l_name(a):
-                        dropped_r = dropped_r.drop(r_name(b))
             matched = matched.unionByName(dropped_r, allowMissingColumns=True)
 
     # --- how: rows dropped as invalid intervals / null keys still appear
@@ -663,11 +662,6 @@ def merge_intervals(
         matched = matched.unionByName(invalid_l, allowMissingColumns=True)
     if how in ("right", "outer"):
         invalid_r = _apply_ren(right.filter(~(rvalid & rkeys_ok)), rren)
-        if drop_right_keys:
-            for a, b in zip(left_on, right_on):
-                invalid_r = invalid_r.withColumn(l_name(a), F.col(r_name(b)))
-                if r_name(b) != l_name(a):
-                    invalid_r = invalid_r.drop(r_name(b))
         matched = matched.unionByName(invalid_r, allowMissingColumns=True)
 
     # restore the multiplicity of duplicate left rows collapsed by the

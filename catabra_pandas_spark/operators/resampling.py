@@ -44,6 +44,7 @@ aggregate row.
 
 from __future__ import annotations
 
+import logging
 import re
 from typing import Callable, Mapping, Optional, Sequence, Union
 
@@ -53,6 +54,8 @@ from pyspark.sql import types as T
 from .merging import merge_intervals
 from .modes import grouped_mode
 from ..util import as_list, ensure_columns, exact_numeric_double
+
+_log = logging.getLogger(__name__)
 
 # internal content-key column names: entity / window start / window stop
 _KE, _KS, _KP = "__w_ent__", "__w_start__", "__w_stop__"
@@ -664,14 +667,19 @@ def _probe_custom_agg(fn, wants_time: bool = False) -> "dict[Optional[str], str]
     (reference ``resampling.py:128-161`` — multi-column custom aggs).
     Runs USER CODE at plan time on the driver; callers who must avoid that
     pass ``custom_agg_schemas`` instead (which always wins on types).
-    Falls back to a scalar ``double`` if the probe raises.
+    Falls back to a scalar ``double`` if the probe raises, and logs the
+    exception as a warning on this module's logger.
     """
     import pandas as pd
 
     try:
         vals = pd.Series([1.0, 2.0, 3.0])
         r = fn(pd.Series([0.0, 1.0, 2.0]), vals) if wants_time else fn(vals)
-    except Exception:
+    except Exception as e:
+        _log.warning("custom aggregation %s: the dummy-series probe raised "
+                     "%r; its output is typed as a scalar double (pass "
+                     "custom_agg_schemas to type it without a probe)",
+                     getattr(fn, "__name__", fn), e)
         return {None: "double"}
     if isinstance(r, Mapping):
         return {str(k): _scalar_ddl(v) for k, v in r.items()}

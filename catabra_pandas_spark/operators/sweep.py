@@ -59,42 +59,11 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .intervals import (_CHUNK, _chunk_from_cuts, _chunk_lit_array,
-                        _default_chunks, _quantile_cuts)
+from .intervals import _CHUNK, _chunk_lit, _chunk_of, _keyless_cuts
 
 _POS = "__sweep_pos__"
 _H1 = "__sweep_h1__"
 _H2 = "__sweep_h2__"
-
-
-def _keyless_chunk_plan(points: DataFrame, v: Column):
-    """Shared chunking plan for the keyless sweep: approx-quantile cuts of
-    the point values plus cumulative per-chunk POINT counts as a literal
-    offset array.  Exactly TWO small driver jobs on the narrow points frame
-    (one quantile probe, one per-chunk count) — the event stream reuses the
-    same cuts and offsets, since its running weight counts only points, so
-    NO job ever runs against the union plan.  (Besides halving the probe
-    jobs, that dodges a Catalyst defect: computing constraints of the
-    point/endpoint Union — which any action on it triggers — dies with
-    ``NoSuchElementException: key not found`` on the aliased-out source
-    columns in Spark 4.1.)
-
-    Returns ``(cuts, offsets_array_col, P)``; ``P == 1`` means a single
-    global chunk (use plain single-task windows).  Ties of ``v`` share a
-    chunk, so order within an equal-value run stays chunk-local and the
-    sweep's tie-permutation safety argument is unaffected."""
-    cuts = _quantile_cuts(points, v, _default_chunks(points))
-    if not cuts:
-        return cuts, None, 1
-    P = len(cuts) + 1
-    per = {r[_CHUNK]: r["__n__"] for r in
-           points.groupBy(_chunk_from_cuts(v, cuts).alias(_CHUNK))
-                 .agg(F.count(F.lit(1)).alias("__n__")).collect()}
-    offs, acc = {}, 0
-    for i in range(P):
-        offs[i] = acc
-        acc += per.get(i) or 0
-    return cuts, _chunk_lit_array(offs, P), P
 
 
 def sweep_point_in_interval(
@@ -120,6 +89,14 @@ def sweep_point_in_interval(
     CONTENT (equal-content rows may share it); when absent, a 128-bit
     content hash over all interval columns is used — the same 2^-128
     collision bound as the generated ids elsewhere in this package.
+
+    Window layout: the numbering windows partition by the equi-keys.
+    Keyless, they partition by a range chunk of the value, cut at
+    approximate quantiles of the points' order-preserving double view
+    (``util.order_view``) with per-chunk point counts as offsets -- two
+    small jobs on the points frame.  Axis types without that view
+    (strings, other orderables) run as one chunk, with no job and no
+    offsets, in the type's own order.
 
     Caller contract (``merge_intervals`` enforces both with its validity
     filters): rows with null key or endpoint values must be filtered out
@@ -160,18 +137,6 @@ def sweep_point_in_interval(
     ivl = intervals.withColumns({
         _H1: F.xxhash64(F.lit(0), *cols),
         _H2: F.xxhash64(F.lit(1), *cols)})
-
-    # --- point numbering ----------------------------------------------
-    if pts_keys:
-        pts = points.withColumn(
-            _POS,
-            F.row_number().over(
-                Window.partitionBy(*[F.col(f"`{k}`") for k in pts_keys])
-                .orderBy(F.col(f"`{pt_col}`"))))
-    else:
-        # keyless: numbered below, together with the event stream — both
-        # reuse ONE shared chunk plan (see _keyless_chunk_plan)
-        pts = None
 
     # --- endpoint/point event stream (NARROW rows — no payload) -------
     # tag order at equal v decides strictness: an INCLUSIVE start sorts
@@ -214,39 +179,45 @@ def sweep_point_in_interval(
     if iv_stop is not None:
         events = events.unionByName(_ivl_events(iv_stop, stop_tag, 0))
 
-    if kcols:
-        w = (Window.partitionBy(*kcols).orderBy("__v__", "__tag__")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        events = events.withColumn("__cnt__", F.sum("__is_pt__").over(w))
-    else:
-        # keyless: chunked global ranks instead of single-task windows.
-        # Point numbering and the event running count share one chunk plan
-        # (same cuts, same cumulative-point-count offsets — the event
-        # stream's running weight counts only points), so the keyless path
-        # costs exactly two small driver jobs total and never runs a job
-        # against the union plan.
-        vv = F.col(f"`{pt_col}`")
-        cuts, offs_arr, P = _keyless_chunk_plan(points, vv)
-        roll = (Window.unboundedPreceding, Window.currentRow)
-        if P == 1:
-            pts = points.withColumn(
-                _POS, F.row_number().over(Window.orderBy(vv)))
-            events = events.withColumn(
-                "__cnt__",
-                F.sum("__is_pt__").over(
-                    Window.orderBy("__v__", "__tag__").rowsBetween(*roll)))
-        else:
-            off = F.element_at(offs_arr, F.col(_CHUNK) + 1).cast("long")
-            wp = Window.partitionBy(_CHUNK).orderBy(vv).rowsBetween(*roll)
-            pts = (points.withColumn(_CHUNK, _chunk_from_cuts(vv, cuts))
-                   .withColumn(_POS, F.sum(F.lit(1)).over(wp) + off)
-                   .drop(_CHUNK))
-            we = (Window.partitionBy(_CHUNK).orderBy("__v__", "__tag__")
-                  .rowsBetween(*roll))
-            events = (events
-                      .withColumn(_CHUNK, _chunk_from_cuts(F.col("__v__"), cuts))
-                      .withColumn("__cnt__", F.sum("__is_pt__").over(we) + off)
-                      .drop(_CHUNK))
+    # --- numbering: point positions and the events' running point count,
+    # on one window path.  The windows partition by the equi-keys; keyless,
+    # by a range chunk of the value (cuts from the points' order view, so
+    # equal values share a chunk and the tie-permutation argument above
+    # holds per chunk), and with more than one chunk each chunk's rows are
+    # shifted by the point count of the chunks before it.  Both streams
+    # reuse the same cuts and offsets, since the events' running weight
+    # counts only points: the keyless path runs at most two small jobs on
+    # the points frame (quantile cuts, per-chunk counts) and none on the
+    # union plan, whose constraint rewrite dies with NoSuchElementException
+    # in Spark 4.1 when an action runs on it.
+    vv = F.col(f"`{pt_col}`")
+    pparts, eparts, P = [F.col(f"`{k}`") for k in pts_keys], kcols, 1
+    pts = points
+    if not kcols:
+        # one axis type for both streams: the union's value type
+        vt = events.schema["__v__"].dataType
+        cuts = _keyless_cuts(points, vv.cast(vt), vt)
+        P = len(cuts) + 1
+        pts = pts.withColumn(_CHUNK, _chunk_of(vv.cast(vt), vt, cuts))
+        events = events.withColumn(
+            _CHUNK, _chunk_of(F.col("__v__"), vt, cuts))
+        pparts = eparts = [_CHUNK]
+    pos = F.row_number().over(Window.partitionBy(*pparts).orderBy(vv))
+    cnt = F.sum("__is_pt__").over(
+        Window.partitionBy(*eparts).orderBy("__v__", "__tag__")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    if P > 1:
+        per = {r[_CHUNK]: r["__n__"] for r in
+               pts.groupBy(_CHUNK).agg(F.count(F.lit(1)).alias("__n__"))
+               .collect()}
+        offs, acc = {}, 0
+        for i in range(P):
+            offs[i] = acc
+            acc += per.get(i) or 0
+        off = _chunk_lit(offs, P).cast("long")
+        pos, cnt = pos + off, cnt + off
+    pts = pts.withColumn(_POS, pos)
+    events = events.withColumn("__cnt__", cnt)
 
     # --- pair endpoints into position ranges (HashAggregate: primitive
     # grouping keys, primitive max buffers; duplicate interval rows

@@ -640,6 +640,40 @@ def _tokenize_batch(texts):
             else [x for x in t.lower().split(" ") if x] for t in texts]
 
 
+def _score_bigrams(df, models, text_col, id_cols, out_col, k, combine):
+    """The map-only scoring pass of ``ngram_perplexity`` and
+    ``dsir_logratio``: broadcast the ``models``' count tables, score each
+    Arrow batch with :func:`_bigram_logprob_sums`, and emit the
+    ``id_cols``, ``n_bigrams`` and ``out_col = combine(sums, nb)`` for the
+    rows with at least one bigram (``sums``: one log-prob sum array per
+    model, in ``models`` order; ``nb``: the bigram counts)."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    id_cols = list(id_cols)
+    bc = df.sparkSession.sparkContext.broadcast(
+        [(m["unigrams"], m["bigrams"], float(m["v"])) for m in models])
+    schema = ", ".join(
+        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
+        + ["n_bigrams long", f"`{out_col}` double"])
+    src = df.select(*id_cols, text_col)
+
+    def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        vocab, prepped = _prep_models([
+            {"unigrams": u, "bigrams": b, "v": v} for (u, b, v) in bc.value])
+        for pdf in batches:
+            nb, sums = _bigram_logprob_sums(
+                _tokenize_batch(pdf[text_col]), vocab, prepped, k)
+            valid = nb > 0
+            out = pdf[id_cols].copy()[valid]
+            out["n_bigrams"] = nb[valid]
+            out[out_col] = combine([x[valid] for x in sums], nb[valid])
+            yield out
+
+    return src.mapInPandas(mapper, schema=schema)
+
+
 def ngram_perplexity(
     df: DataFrame,
     model: dict,
@@ -664,34 +698,13 @@ def ngram_perplexity(
     than two tokens are omitted (no bigram to score — filter them with
     the quality gate instead).
     """
-    from typing import Iterator
-
-    import pandas as pd
-
-    id_cols = list(id_cols)
-    bc = df.sparkSession.sparkContext.broadcast(
-        (model["unigrams"], model["bigrams"], float(model["v"])))
-    schema = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
-        + ["n_bigrams long", f"`{out_col}` double"])
-    src = df.select(*id_cols, text_col)
-
-    def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def perplexity(sums, nb):
         import numpy as np
 
-        vocab, prepped = _prep_models([{
-            "unigrams": bc.value[0], "bigrams": bc.value[1],
-            "v": bc.value[2]}])
-        for pdf in batches:
-            nb, (s,) = _bigram_logprob_sums(
-                _tokenize_batch(pdf[text_col]), vocab, prepped, k)
-            valid = nb > 0
-            out = pdf[id_cols].copy()[valid]
-            out["n_bigrams"] = nb[valid]
-            out[out_col] = np.exp(-s[valid] / nb[valid])
-            yield out
+        return np.exp(-sums[0] / nb)
 
-    return src.mapInPandas(mapper, schema=schema)
+    return _score_bigrams(df, [model], text_col, id_cols, out_col, k,
+                          perplexity)
 
 
 def dsir_logratio(
@@ -728,35 +741,9 @@ def dsir_logratio(
     Documents with fewer than two tokens are omitted (no bigram to
     score — same contract as ``ngram_perplexity``).  Output: the
     ``id_cols`` plus ``n_bigrams`` and ``out_col``."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    id_cols = list(id_cols)
-    bc = df.sparkSession.sparkContext.broadcast((
-        (target_model["unigrams"], target_model["bigrams"],
-         float(target_model["v"])),
-        (raw_model["unigrams"], raw_model["bigrams"],
-         float(raw_model["v"])),
-    ))
-    schema = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
-        + ["n_bigrams long", f"`{out_col}` double"])
-    src = df.select(*id_cols, text_col)
-
-    def mapper(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        vocab, prepped = _prep_models([
-            {"unigrams": u, "bigrams": b, "v": v} for (u, b, v) in bc.value])
-        for pdf in batches:
-            nb, (st, sr) = _bigram_logprob_sums(
-                _tokenize_batch(pdf[text_col]), vocab, prepped, k)
-            valid = nb > 0
-            out = pdf[id_cols].copy()[valid]
-            out["n_bigrams"] = nb[valid]
-            out[out_col] = (st[valid] - sr[valid]) / nb[valid]
-            yield out
-
-    return src.mapInPandas(mapper, schema=schema)
+    return _score_bigrams(
+        df, [target_model, raw_model], text_col, id_cols, out_col, k,
+        lambda sums, nb: (sums[0] - sums[1]) / nb)
 
 
 def quantile_buckets(

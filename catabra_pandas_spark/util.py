@@ -115,6 +115,21 @@ def exact_numeric_double(c: Column, dt) -> Column:
     return numeric_double(c, dt)
 
 
+def order_view(c: Column, dt) -> Optional[Column]:
+    """Order-preserving double view of an axis column, or None when its
+    type has none.  Numeric, date/timestamp and day-time-interval columns
+    map through ``exact_numeric_double`` (monotone: ``a < b`` implies
+    ``view(a) <= view(b)``); strings and any other orderable type return
+    None.  Keyless range-chunked windows cut and assign chunks on this
+    view; an axis without one runs as a single chunk."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.NumericType, T.DateType, T.TimestampType,
+                       T.TimestampNTZType, T.DayTimeIntervalType)):
+        return exact_numeric_double(c, dt)
+    return None
+
+
 def _interval_seconds_decimal(c: Column) -> Column:
     """Exact total seconds of a day-time interval as a DECIMAL: widen to
     the canonical DAY TO SECOND field range and sum the extracted fields.

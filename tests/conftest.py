@@ -61,3 +61,19 @@ def assert_pdf_equal(actual: pd.DataFrame, expected: pd.DataFrame, sort_by=None,
         else:
             ok = ((a == e) | (a.isna() & e.isna())).all()
         assert ok, f"column {c!r} differs:\nactual:\n{actual[c]}\nexpected:\n{expected[c]}"
+
+
+def axis_as(sdf, cols, kind: str):
+    """Re-type the integer axis columns ``cols`` of ``sdf``: "date" (that
+    many days after 2024-01-01), "daytime" (a day-time interval of that
+    many seconds) or "string" (the decimal digits, so lexicographic order
+    differs from numeric order: "10" < "9")."""
+    from pyspark.sql import functions as F
+
+    conv = {
+        "date": lambda c: F.date_add(F.lit("2024-01-01").cast("date"),
+                                     c.cast("int")),
+        "daytime": lambda c: F.make_dt_interval(secs=c.cast("decimal(18,6)")),
+        "string": lambda c: c.cast("string"),
+    }[kind]
+    return sdf.withColumns({c: conv(F.col(c)) for c in cols})

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 
 from catabra_pandas_spark import combine_intervals, group_intervals, grouped_mode
-from .conftest import assert_pdf_equal, to_sdf
+from .conftest import assert_pdf_equal, axis_as, to_sdf
 
 
 def _rand_intervals(seed, n=150, n_groups=6, zero_frac=0.3):
@@ -144,6 +144,26 @@ def test_combine_intervals_keyless_chunked(spark, n_min, n_max):
     grouped = combine_intervals(sdf, start_col="start", stop_col="stop",
                                 group_by="g", n_min=n_min, n_max=n_max
                                 ).toPandas().drop(columns=["g"])
+    assert_pdf_equal(keyless, grouped, sort_by=["start", "stop"])
+
+
+@pytest.mark.parametrize("kind", ["date", "daytime", "string"])
+def test_combine_intervals_keyless_axis_types(spark, kind):
+    """Keyless combine == the constant-key call on date, day-time-interval
+    and string endpoints.  The keyless sweep range-chunks by the axis'
+    order view (several chunks for date and interval axes); strings have
+    no such view and run as one chunk, in lexicographic order."""
+    rng = np.random.default_rng(13)
+    start = rng.integers(0, 1000, 200)
+    pdf = pd.DataFrame({"start": start,
+                        "stop": start + rng.integers(0, 15, 200), "g": 0})
+    sdf = axis_as(spark.createDataFrame(pdf), ["start", "stop"], kind)
+    keyless = combine_intervals(sdf, start_col="start", stop_col="stop",
+                                n_min=2).toPandas()
+    grouped = combine_intervals(sdf, start_col="start", stop_col="stop",
+                                group_by="g", n_min=2
+                                ).toPandas().drop(columns=["g"])
+    assert len(grouped) > 10
     assert_pdf_equal(keyless, grouped, sort_by=["start", "stop"])
 
 

@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 
 from catabra_pandas_spark import find_containing_interval, merge_intervals
-from .conftest import assert_pdf_equal, to_sdf
+from .conftest import assert_pdf_equal, axis_as, to_sdf
 
 
 def _make_sides(seed, n_left=300, n_right=120, n_groups=12):
@@ -639,6 +639,32 @@ def test_merge_sweep_half_infinite(spark):
                         right_stop="rstop", strategy="sweep")
 
 
+@pytest.mark.parametrize("kind", ["date", "daytime", "string"])
+def test_merge_sweep_keyless_axis_types(spark, kind):
+    """Keyless strategy="sweep" == direct on date, day-time-interval and
+    string endpoints, for a general overlap (two point-in-interval
+    sweeps, one with a strict lower bound).  The keyless sweep
+    range-chunks by the axis' order view; strings (here the decimal
+    digits of integers, whose lexicographic order is not their numeric
+    order) run as one chunk."""
+    rng = np.random.RandomState(23)
+    left = pd.DataFrame({"start": rng.randint(0, 1000, 300),
+                         "idx": np.arange(300)})
+    left["stop"] = left["start"] + rng.randint(0, 60, 300)
+    right = pd.DataFrame({"rstart": rng.randint(0, 1000, 200),
+                          "ridx": np.arange(200)})
+    right["rstop"] = right["rstart"] + rng.randint(0, 30, 200)
+    li = axis_as(spark.createDataFrame(left), ["start", "stop"], kind)
+    ri = axis_as(spark.createDataFrame(right), ["rstart", "rstop"], kind)
+    d, s = (merge_intervals(li, ri, how="inner", strategy=st,
+                            left_start="start", left_stop="stop",
+                            right_start="rstart", right_stop="rstop")
+            .select("idx", "ridx").toPandas()
+            for st in ("direct", "sweep"))
+    assert len(d) > 100
+    assert_pdf_equal(s, d, sort_by=["idx", "ridx"])
+
+
 def test_merge_intervals_self_join_derived_frames(spark):
     """Both inputs cut from ONE parent frame (windows and observations
     derived from the same table — the make_windows flow) must work on
@@ -707,14 +733,15 @@ def test_auto_strategy_cost_detector(spark):
         merge_intervals(l3, r3, strategy="direct", **kw))
 
     # half-infinite endpoints and degenerate sides with exclusive flags
-    # are outside the sweep preconditions: auto never raises, runs direct
+    # are shapes the sweep accepts, so the detector decides them too (an
+    # open point side is empty after the validity filter on every plan)
     assert merge_intervals(l, r, on="group", how="inner",
                            left_start="start", right_start="p",
                            right_stop="p").sameSemantics(
         merge_intervals(l, r, on="group", how="inner", left_start="start",
-                        right_start="p", right_stop="p", strategy="direct"))
+                        right_start="p", right_stop="p", strategy="sweep"))
     assert merge_intervals(l, r, include_right_start=False, **kw).sameSemantics(
-        merge_intervals(l, r, include_right_start=False, strategy="direct", **kw))
+        merge_intervals(l, r, include_right_start=False, strategy="sweep", **kw))
 
 
 def test_find_containing_auto_strategy(spark):
@@ -794,12 +821,13 @@ def test_auto_strategy_keyless_rescue(spark):
     assert merge_intervals(l2, r2, **kw).sameSemantics(
         merge_intervals(l2, r2, strategy="direct", **kw))
 
-    # half-infinite endpoints are outside the sweep preconditions: direct
+    # half-infinite endpoints: the detector runs for every shape the
+    # sweep accepts, and this ratio picks the sweep
     l3 = l.select("stop")
     assert merge_intervals(l3, r, how="inner", left_start="stop",
                            left_stop="stop", right_stop="p").sameSemantics(
         merge_intervals(l3, r, how="inner", left_start="stop",
-                        left_stop="stop", right_stop="p", strategy="direct"))
+                        left_stop="stop", right_stop="p", strategy="sweep"))
 
     # keyless + bucket_width keeps the bucket strategy
     assert merge_intervals(l, r, bucket_width=1.0, **kw).sameSemantics(

@@ -762,9 +762,9 @@ def test_resample_interval_auto_strategy(spark):
 
 def test_resample_eav_auto_strategy_one_sided_windows(spark):
     """A windows frame with only ONE endpoint column (half-infinite
-    windows) is outside the cost detector's preconditions (merge_intervals'
-    auto needs four endpoint columns), so auto runs direct; the pinned
-    one-sided sweep agrees with it."""
+    windows) is a shape the sweep accepts, so merge_intervals' auto runs
+    its cost detector on it: on few large entities it picks the sweep,
+    whose counts equal the direct join's."""
     rng = np.random.RandomState(3)
     n, m = 40_000, 30_000
     obs = pd.DataFrame({
@@ -778,8 +778,8 @@ def test_resample_eav_auto_strategy_one_sided_windows(spark):
     spec = {"hr": ["count"]}
     kw = dict(regular=False, assume_unique_windows=True)
     direct = resample_eav(o, w, spec, join_strategy="direct", **kw)
-    assert resample_eav(o, w, spec, **kw).sameSemantics(direct)
     sweep = resample_eav(o, w, spec, join_strategy="sweep", **kw)
+    assert resample_eav(o, w, spec, **kw).sameSemantics(sweep)
     assert not sweep.sameSemantics(direct)
     a = sweep.toPandas().sort_values(
         ["entity", "timestamp_start"]).reset_index(drop=True)
@@ -787,3 +787,27 @@ def test_resample_eav_auto_strategy_one_sided_windows(spark):
         ["entity", "timestamp_start"]).reset_index(drop=True)
     assert len(a) == len(d) == m
     assert a["hr_count"].tolist() == d["hr_count"].tolist()
+
+
+def test_probe_custom_agg_logs_fallback(caplog):
+    """A custom aggregation whose dummy-series probe raises falls back to a
+    scalar double output, and the fallback is logged with the exception
+    (no Spark needed: the probe runs on the driver)."""
+    import logging
+
+    from catabra_pandas_spark.operators.resampling import _probe_custom_agg
+
+    def needs_ten(s):
+        if len(s) < 10:
+            raise ValueError("needs ten rows")
+        return s.mean()
+
+    with caplog.at_level(logging.WARNING,
+                         logger="catabra_pandas_spark.operators.resampling"):
+        assert _probe_custom_agg(needs_ten) == {None: "double"}
+    rec = [r for r in caplog.records if "needs_ten" in r.getMessage()]
+    assert rec and "needs ten rows" in rec[0].getMessage()
+    caplog.clear()
+    # a probe that succeeds logs nothing
+    assert _probe_custom_agg(lambda s: {"lo": s.min()}) == {"lo": "double"}
+    assert not caplog.records
