@@ -110,6 +110,17 @@ def _chunk_lit(values, n: int) -> Column:
     return F.element_at(_chunk_lit_array(values, n), F.col(_CHUNK) + 1)
 
 
+def _exclusive_prefix(per: dict, n: int) -> dict:
+    """Chunk id (0..n-1) -> sum of ``per`` over the chunks before it
+    (chunks absent from ``per`` count 0): the offset a chunked window adds
+    to its per-chunk running values."""
+    out, acc = {}, 0
+    for i in range(n):
+        out[i] = acc
+        acc += per.get(i) or 0
+    return out
+
+
 def group_intervals(
     df: DataFrame,
     group_by: Union[str, Sequence[str], None] = None,
@@ -334,10 +345,7 @@ def _coverage_bands(
             F.sum("__delta__").alias("s"), F.min("__t__").alias("t0")).collect()
         sums = {r[_CHUNK]: int(r["s"]) for r in summ}
         firsts = {r[_CHUNK]: r["t0"] for r in summ}
-        prefix, acc = {}, 0
-        for i in range(P):
-            prefix[i] = acc
-            acc += sums.get(i, 0)
+        prefix = _exclusive_prefix(sums, P)
         nxt, nt = {}, None
         for i in reversed(range(P)):
             nxt[i] = nt
@@ -371,11 +379,7 @@ def _coverage_bands(
         seg = seg.withColumn("__flag__", flag)
         cnts = {r[_CHUNK]: int(r["n"] or 0) for r in
                 seg.groupBy(_CHUNK).agg(F.sum("__flag__").alias("n")).collect()}
-        offs, acc = {}, 0
-        for i in range(P):
-            offs[i] = acc
-            acc += cnts.get(i, 0)
-        island_off = _chunk_lit(offs, P)
+        island_off = _chunk_lit(_exclusive_prefix(cnts, P), P)
         flag = F.col("__flag__")
     island = island_off + F.sum(flag).over(
         w.rowsBetween(Window.unboundedPreceding, 0))

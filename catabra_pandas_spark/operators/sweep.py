@@ -59,7 +59,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .intervals import _CHUNK, _chunk_lit, _chunk_of, _keyless_cuts
+from .intervals import (_CHUNK, _chunk_lit, _chunk_of, _exclusive_prefix,
+                        _keyless_cuts)
 
 _POS = "__sweep_pos__"
 _H1 = "__sweep_h1__"
@@ -210,11 +211,7 @@ def sweep_point_in_interval(
         per = {r[_CHUNK]: r["__n__"] for r in
                pts.groupBy(_CHUNK).agg(F.count(F.lit(1)).alias("__n__"))
                .collect()}
-        offs, acc = {}, 0
-        for i in range(P):
-            offs[i] = acc
-            acc += per.get(i) or 0
-        off = _chunk_lit(offs, P).cast("long")
+        off = _chunk_lit(_exclusive_prefix(per, P), P).cast("long")
         pos, cnt = pos + off, cnt + off
     pts = pts.withColumn(_POS, pos)
     events = events.withColumn("__cnt__", cnt)

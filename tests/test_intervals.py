@@ -131,39 +131,35 @@ def test_group_intervals_keyless_chunked(spark, seed, distance, inclusive):
     assert_pdf_equal(keyless, grouped, sort_by=["start", "stop", "attr"])
 
 
-@pytest.mark.parametrize("n_min,n_max", [(1, None), (2, None), (0, 0), (2, 3)])
-def test_combine_intervals_keyless_chunked(spark, n_min, n_max):
+@pytest.mark.parametrize("n_min,n_max,kind", [
+    pytest.param(1, None, None, id="1-None"),
+    pytest.param(2, None, None, id="2-None"),
+    pytest.param(0, 0, None, id="0-0"),
+    pytest.param(2, 3, None, id="2-3"),
+    pytest.param(2, 3, "date", id="date"),
+    pytest.param(2, 3, "daytime", id="daytime"),
+    pytest.param(2, 3, "string", id="string"),
+])
+def test_combine_intervals_keyless_chunked(spark, n_min, n_max, kind):
     """Keyless coverage sweep (chunked) == grouped sweep with constant key:
     running coverage, boundary-spanning segments, and islands continuing
-    across chunks must all stitch correctly."""
-    pdf = _rand_intervals(11, n=600, n_groups=1).assign(g=0)
+    across chunks must all stitch correctly.  The ``kind`` cases re-type
+    the endpoints of a smaller input as dates, day-time intervals or
+    strings: the keyless sweep range-chunks by the axis' order view
+    (several chunks for date and interval axes); strings have no such
+    view and run as one chunk, in lexicographic order ("10.5" < "9.5")."""
+    pdf = _rand_intervals(11, n=60 if kind else 600, n_groups=1).assign(g=0)
     pdf.loc[:2, "stop"] = pdf.loc[:2, "start"] + 40.0
     sdf = to_sdf(spark, pdf)
+    if kind:
+        sdf = axis_as(sdf, ["start", "stop"], kind)
     keyless = combine_intervals(sdf, start_col="start", stop_col="stop",
                                 n_min=n_min, n_max=n_max).toPandas()
     grouped = combine_intervals(sdf, start_col="start", stop_col="stop",
                                 group_by="g", n_min=n_min, n_max=n_max
                                 ).toPandas().drop(columns=["g"])
-    assert_pdf_equal(keyless, grouped, sort_by=["start", "stop"])
-
-
-@pytest.mark.parametrize("kind", ["date", "daytime", "string"])
-def test_combine_intervals_keyless_axis_types(spark, kind):
-    """Keyless combine == the constant-key call on date, day-time-interval
-    and string endpoints.  The keyless sweep range-chunks by the axis'
-    order view (several chunks for date and interval axes); strings have
-    no such view and run as one chunk, in lexicographic order."""
-    rng = np.random.default_rng(13)
-    start = rng.integers(0, 1000, 200)
-    pdf = pd.DataFrame({"start": start,
-                        "stop": start + rng.integers(0, 15, 200), "g": 0})
-    sdf = axis_as(spark.createDataFrame(pdf), ["start", "stop"], kind)
-    keyless = combine_intervals(sdf, start_col="start", stop_col="stop",
-                                n_min=2).toPandas()
-    grouped = combine_intervals(sdf, start_col="start", stop_col="stop",
-                                group_by="g", n_min=2
-                                ).toPandas().drop(columns=["g"])
-    assert len(grouped) > 10
+    if kind:
+        assert len(grouped) > 5
     assert_pdf_equal(keyless, grouped, sort_by=["start", "stop"])
 
 

@@ -642,23 +642,22 @@ def test_merge_sweep_half_infinite(spark):
 @pytest.mark.parametrize("kind", ["date", "daytime", "string"])
 def test_merge_sweep_keyless_axis_types(spark, kind):
     """Keyless strategy="sweep" == direct on date, day-time-interval and
-    string endpoints, for a general overlap (two point-in-interval
-    sweeps, one with a strict lower bound).  The keyless sweep
-    range-chunks by the axis' order view; strings (here the decimal
-    digits of integers, whose lexicographic order is not their numeric
-    order) run as one chunk."""
+    string endpoints, for points in intervals with a strict lower bound.
+    The keyless sweep range-chunks by the axis' order view; strings (here
+    the decimal digits of integers, whose lexicographic order is not their
+    numeric order) run as one chunk."""
     rng = np.random.RandomState(23)
     left = pd.DataFrame({"start": rng.randint(0, 1000, 300),
                          "idx": np.arange(300)})
     left["stop"] = left["start"] + rng.randint(0, 60, 300)
-    right = pd.DataFrame({"rstart": rng.randint(0, 1000, 200),
+    right = pd.DataFrame({"p": rng.randint(0, 1000, 200),
                           "ridx": np.arange(200)})
-    right["rstop"] = right["rstart"] + rng.randint(0, 30, 200)
     li = axis_as(spark.createDataFrame(left), ["start", "stop"], kind)
-    ri = axis_as(spark.createDataFrame(right), ["rstart", "rstop"], kind)
+    ri = axis_as(spark.createDataFrame(right), ["p"], kind)
     d, s = (merge_intervals(li, ri, how="inner", strategy=st,
                             left_start="start", left_stop="stop",
-                            right_start="rstart", right_stop="rstop")
+                            right_start="p", right_stop="p",
+                            include_left_start=False)
             .select("idx", "ridx").toPandas()
             for st in ("direct", "sweep"))
     assert len(d) > 100
@@ -732,14 +731,16 @@ def test_auto_strategy_cost_detector(spark):
     assert merge_intervals(l3, r3, **kw).sameSemantics(
         merge_intervals(l3, r3, strategy="direct", **kw))
 
-    # half-infinite endpoints and degenerate sides with exclusive flags
-    # are shapes the sweep accepts, so the detector decides them too (an
-    # open point side is empty after the validity filter on every plan)
+    # half-infinite endpoints are outside the detector's shapes (their
+    # output is as large as direct's residual): auto runs direct
     assert merge_intervals(l, r, on="group", how="inner",
                            left_start="start", right_start="p",
                            right_stop="p").sameSemantics(
         merge_intervals(l, r, on="group", how="inner", left_start="start",
-                        right_start="p", right_stop="p", strategy="sweep"))
+                        right_start="p", right_stop="p", strategy="direct"))
+    # a degenerate side with an exclusive flag is a shape the sweep
+    # accepts, so the detector decides it (an open point side is empty
+    # after the validity filter on every plan)
     assert merge_intervals(l, r, include_right_start=False, **kw).sameSemantics(
         merge_intervals(l, r, include_right_start=False, strategy="sweep", **kw))
 
@@ -821,13 +822,12 @@ def test_auto_strategy_keyless_rescue(spark):
     assert merge_intervals(l2, r2, **kw).sameSemantics(
         merge_intervals(l2, r2, strategy="direct", **kw))
 
-    # half-infinite endpoints: the detector runs for every shape the
-    # sweep accepts, and this ratio picks the sweep
+    # half-infinite endpoints are outside the detector's shapes: direct
     l3 = l.select("stop")
     assert merge_intervals(l3, r, how="inner", left_start="stop",
                            left_stop="stop", right_stop="p").sameSemantics(
         merge_intervals(l3, r, how="inner", left_start="stop",
-                        left_stop="stop", right_stop="p", strategy="sweep"))
+                        left_stop="stop", right_stop="p", strategy="direct"))
 
     # keyless + bucket_width keeps the bucket strategy
     assert merge_intervals(l, r, bucket_width=1.0, **kw).sameSemantics(

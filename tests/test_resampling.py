@@ -762,9 +762,11 @@ def test_resample_interval_auto_strategy(spark):
 
 def test_resample_eav_auto_strategy_one_sided_windows(spark):
     """A windows frame with only ONE endpoint column (half-infinite
-    windows) is a shape the sweep accepts, so merge_intervals' auto runs
-    its cost detector on it: on few large entities it picks the sweep,
-    whose counts equal the direct join's."""
+    windows) is outside the cost detector's shapes (merge_intervals' auto
+    weighs the sweep only with four endpoint columns: a half-infinite side
+    makes the output as large as direct's residual, and on this input the
+    sweep measured 5x slower), so auto runs direct; the pinned one-sided
+    sweep agrees with it."""
     rng = np.random.RandomState(3)
     n, m = 40_000, 30_000
     obs = pd.DataFrame({
@@ -778,8 +780,8 @@ def test_resample_eav_auto_strategy_one_sided_windows(spark):
     spec = {"hr": ["count"]}
     kw = dict(regular=False, assume_unique_windows=True)
     direct = resample_eav(o, w, spec, join_strategy="direct", **kw)
+    assert resample_eav(o, w, spec, **kw).sameSemantics(direct)
     sweep = resample_eav(o, w, spec, join_strategy="sweep", **kw)
-    assert resample_eav(o, w, spec, **kw).sameSemantics(sweep)
     assert not sweep.sameSemantics(direct)
     a = sweep.toPandas().sort_values(
         ["entity", "timestamp_start"]).reset_index(drop=True)
